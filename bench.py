@@ -14,14 +14,19 @@ overhead distorting the numbers. A warmup query amortizes JVM/codegen
 startup out of the per-query timings.
 
 Breadth timings (every non-headline registered query, one pass each)
-go to stderr and ``BENCH_BREADTH.json`` — stdout stays one compact
-line so a bounded tail capture always parses the headline number.
+go to stderr and ``BENCH_BREADTH.json``.
+
+    python bench.py                  # headline + breadth
+    python bench.py --headline-only  # headline only
+
+The repo's benchmark (seeded inputs, oracle-checked outputs, per-layer
+split) is ``python3 perfbench/run.py``; this script is the quick
+per-query timing over a shared scale-factor directory.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import re
 import sys
 import time
@@ -43,7 +48,7 @@ HEADLINE = [
     "dedup_exact",          # hash-based exact dedup
     "dedup_minhash_lsh",    # MinHash+LSH near-dup self-join
     "similarity_topk_bruteforce",  # cosine top-k over embeddings
-    "similarity_ann_ivf",   # IVF coarse-quantized ANN (train + probe)
+    "similarity_ann_ivf",   # IVF ANN recall gate (train + probe + exact)
     "text_quality_scores",  # text-analysis pipeline pass
     "tfidf_top_terms",      # tf-idf scoring + per-doc top-k
     "subquery_scalar_correlated",  # decorrelated scalar subquery
@@ -60,17 +65,6 @@ def _sf_of(sf_dir: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
-def _raw_overrides() -> dict:
-    """Headline plans timed by their RAW implementation where the
-    registered query is a correctness wrapper: similarity_ann_ivf's
-    registry entry is now the recall gate (ANN + exact + semi-join,
-    so the driver gets a hash row), but the cross-round bench anchor
-    is the physical ANN plan itself."""
-    from mapreducegcp_spark.operators.similarity import q_similarity_ann_ivf
-
-    return {"similarity_ann_ivf": q_similarity_ann_ivf}
-
-
 def _run(fn, spark, sf_dir) -> float:
     t0 = time.perf_counter()
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -85,10 +79,7 @@ def _calibrate() -> float:
     32-core box reads a stable ~0.2-0.4s; a loaded box (concurrent
     pytest, a second Spark session) inflates it roughly with the load,
     making a slow capture machine-adjudicable from the artifact alone
-    instead of by round-over-round inference (the round-5 and round-6
-    BENCH_BREADTH contention artifacts each needed a judge rerun to
-    adjudicate; this field replaces that with arithmetic).
-    tools/bench_trend.py reads it to mark movers as load-explained."""
+    instead of by round-over-round inference."""
     import hashlib
 
     buf = b"\x5a" * (1 << 20)
@@ -129,96 +120,6 @@ def _calibrate_mt(n_threads: int = 8) -> float:
     return round(time.perf_counter() - t0, 3)
 
 
-def _interleaved_field(root: Path | None = None) -> dict | None:
-    """Newest round-mode ``BENCH_INTERLEAVE_r{N}.json``, compacted for
-    embedding in the stdout headline object. Single-session captures
-    carry ±10-15% session noise (measured round 10), so the canonical
-    round-over-round ratio is the interleaved same-session prev-vs-head
-    min-of-N — embedding it here puts that number INSIDE the
-    driver-recorded ``BENCH_r{N}.json`` by construction (round-10
-    verdict ask #1). ``at_current_head`` is False when commits landed
-    after the capture — a stale embed is visible, not silent.
-
-    COMPACT BY CONTRACT (round-11 verdict ask #1): the embed carries
-    ratio / totals / commits / staleness ONLY — the per-query min
-    dicts stay in the artifact file named by ``file`` (consumers such
-    as tools/bench_trend.py load them from there). Round 11 embedded
-    both full per-query dicts and pushed the single stdout JSON line
-    past the driver's 2000-char tail capture, recording
-    ``parsed: null`` in the external BENCH_r11.json; tests pin the
-    stdout line under 1900 chars so that cannot recur."""
-    repo = Path(__file__).resolve().parent  # git root, regardless of
-    root = root or repo                     # where artifacts are read from
-    arts = sorted(
-        (p for p in root.glob("BENCH_INTERLEAVE_r*.json")
-         if re.search(r"r(\d+)\.json$", p.name)),
-        key=lambda p: int(re.search(r"r(\d+)", p.name).group(1)),
-    )
-    for p in reversed(arts):
-        try:
-            doc = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        if "ratio" not in doc:  # pre-round-11 ad-hoc capture (e.g. r10)
-            continue
-        head_now = None
-        stale_source: list[str] | None = None
-        try:
-            import subprocess
-
-            head_now = subprocess.run(
-                ["git", "-C", str(repo), "rev-parse", "HEAD"],
-                capture_output=True, text=True, timeout=15,
-            ).stdout.strip()
-            cap = doc.get("head_commit")
-            if head_now and cap and head_now != cap:
-                # artifact/notes commits land AFTER the capture by
-                # construction (the artifact itself is committed); the
-                # ratio is only invalidated by SOURCE drift — list any
-                # engine/bench paths changed since the capture so an
-                # empty list reads as "artifact-only drift, ratio valid"
-                proc = subprocess.run(
-                    ["git", "-C", str(repo), "diff", "--name-only",
-                     cap, "HEAD"],
-                    capture_output=True, text=True, timeout=15,
-                )
-                if proc.returncode == 0:  # unknown capture commit -> None
-                    stale_source = sorted(
-                        p for p in (x.strip() for x in proc.stdout.splitlines())
-                        if p.startswith("mapreducegcp_spark/") or p == "bench.py"
-                    )
-        except Exception:  # noqa: BLE001 — non-git installs still embed
-            pass
-        out = {
-            "file": p.name,
-            "round": doc.get("round"),
-            "prev_rev": (doc.get("prev_rev") or "")[:12],
-            "head_commit": (doc.get("head_commit") or "")[:12],
-            "at_current_head": (
-                None if not head_now
-                else head_now == doc.get("head_commit")
-            ),
-            # bounded: a long-lived capture could trail dozens of
-            # changed paths; the count is exact, the listing capped
-            "stale_source_paths": (
-                None if stale_source is None else stale_source[:5]
-            ),
-            "stale_source_n": (
-                None if stale_source is None else len(stale_source)
-            ),
-            "runs": doc.get("runs"),
-            "ratio": doc.get("ratio"),
-            "prev_total_min": doc.get("prev", {}).get("total_min"),
-            "head_total_min": doc.get("head", {}).get("total_min"),
-        }
-        # multi-capture rounds record the same-tree ratio spread (the
-        # method's residual, ~±3%) so one ratio is never over-read
-        if doc.get("residual_band") is not None:
-            out["residual_band"] = doc["residual_band"]
-        return out
-    return None
-
-
 def _cpu_snap() -> list[int] | None:
     """Aggregate jiffy counters from /proc/stat (user nice system idle
     iowait irq softirq steal ...). Diffed across the whole bench run
@@ -245,23 +146,10 @@ def _cpu_profile(a: list[int] | None, b: list[int] | None) -> dict | None:
 
 def main() -> None:
     headline_only = "--headline-only" in sys.argv
-    # --smoke: no Spark, zero timings — exercises the REAL stdout
-    # headline construction (including the interleave embed against
-    # whatever artifacts are on disk) so tests can pin the driver's
-    # tail-capture contract without a 15-minute bench run.
-    smoke = "--smoke" in sys.argv
-    known = {"--headline-only", "--all", "--smoke"}  # --all is the (default) breadth mode
-    unknown = [a for a in sys.argv[1:] if a.startswith("--") and a not in known]
+    unknown = [a for a in sys.argv[1:] if a.startswith("--") and a != "--headline-only"]
     if unknown:
         print(f"bench: unknown flags {unknown}", file=sys.stderr)
         sys.exit(2)
-
-    if smoke:
-        sf_dir = sf_dir_from_env()
-        timings = {n: 0.0 for n in HEADLINE}
-        runs = {n: [0.0, 0.0] for n in HEADLINE}
-        _emit_headline(timings, runs, [0.0, 0.0], [0.0, 0.0], None, sf_dir)
-        return
 
     sf_dir = sf_dir_from_env()
     spark = get_spark("mapreducegcp-bench")
@@ -269,44 +157,31 @@ def main() -> None:
 
     # Warmup: run the cheapest query once to pay JVM + codegen startup.
     catalog["wordcount"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    raw = _raw_overrides()
 
     # Headliners get best-of-2: the first run can pay lazy codegen/
     # broadcast warmup that belongs to the JVM, not the plan — min is
     # the stable engine-side number (run-to-run noise at sf0.1 measured
     # up to 6x on short queries with a single pass). `value` sums ONLY
-    # these 18 — the cross-round trend anchor.
+    # these 18.
     cal_before = _calibrate()
     cal_mt_before = _calibrate_mt()
     cpu0 = _cpu_snap()
     timings: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
     for name in HEADLINE:
-        fn = raw.get(name) or (catalog[name].fn if name in catalog else None)
-        if fn is None:  # a renamed headliner must not abort the whole bench
+        if name not in catalog:  # a renamed headliner must not abort the whole bench
             print(f"bench: headline query {name!r} not registered", file=sys.stderr)
             continue
-        runs[name] = [round(_run(fn, spark, sf_dir), 3) for _ in range(2)]
+        runs[name] = [round(_run(catalog[name].fn, spark, sf_dir), 3) for _ in range(2)]
         timings[name] = min(runs[name])
 
     # Breadth: every other registered query, one pass each, so a
-    # regression in a non-headline operator is visible round over round.
-    # Breadth timings go to a SIDE ARTIFACT (BENCH_BREADTH.json) plus
-    # stderr — NOT stdout. Round 2 lost its headline number because the
-    # single stdout JSON line grew past the driver's tail capture; the
-    # final stdout line must stay the compact headline object so
-    # whatever tail window the driver keeps always parses.
+    # regression in a non-headline operator is visible.
     if not headline_only:
         breadth: dict[str, float] = {}
         reruns: dict[str, list[float]] = {}
-        gates: list[dict] = []
         for name in sorted(catalog):
-            # Headliners timed from the catalog are covered; a headliner
-            # timed via a RAW override still gets its REGISTERED plan
-            # (e.g. the ANN recall gate the driver actually runs) timed
-            # here under a `_gate` key, so a regression in the wrapper
-            # stays bench-visible.
-            if name in timings and name not in raw:
+            if name in timings:
                 continue
             try:
                 sec = round(_run(catalog[name].fn, spark, sf_dir), 3)
@@ -324,19 +199,11 @@ def main() -> None:
             except Exception as e:  # noqa: BLE001 — a broken query must not hide the rest
                 sec = -1.0
                 print(f"bench error {name}: {e}", file=sys.stderr)
-            if name not in timings:
-                breadth[name] = sec
-            else:
-                # the registered wrapper of a RAW-overridden headliner:
-                # keep the key a real catalog name so artifact consumers
-                # can join on it; the variant field marks it as the
-                # gate-wrapper timing, not the raw headline plan
-                gates.append({"name": name, "variant": "gate", "sec": sec})
+            breadth[name] = sec
         breadth_doc = {
             "metric": "breadth_sec",
             "queries": breadth,
             "reruns": reruns,
-            "gate_wrappers": gates,
             "calibration_sec": [cal_before, _calibrate()],
             "calibration_mt_sec": [cal_mt_before, _calibrate_mt()],
             "cpu_profile": _cpu_profile(cpu0, _cpu_snap()),
@@ -350,32 +217,6 @@ def main() -> None:
         except OSError as e:
             print(f"bench: could not write BENCH_BREADTH.json: {e}", file=sys.stderr)
 
-    _emit_headline(
-        timings,
-        runs,
-        [cal_before, _calibrate()],
-        [cal_mt_before, _calibrate_mt()],
-        _cpu_profile(cpu0, _cpu_snap()),
-        sf_dir,
-    )
-
-
-# The driver records the LAST ~2000 chars of stdout and parses the
-# final JSON line out of that tail; a headline line longer than the
-# window leaves the external BENCH_r{N}.json with ``parsed: null``
-# (happened round 2 and again round 11). Budget enforced here AND
-# pinned by tests/test_bench_trend.py against the real artifacts.
-STDOUT_LINE_BUDGET = 1900
-
-
-def _emit_headline(
-    timings: dict[str, float],
-    runs: dict[str, list[float]],
-    cal: list[float],
-    cal_mt: list[float],
-    cpu_profile: dict | None,
-    sf_dir: str,
-) -> None:
     doc = {
         "metric": "headline_total_sec",
         "value": round(sum(timings.values()), 3),
@@ -384,45 +225,19 @@ def _emit_headline(
         # both raw passes per headliner: the headline `value` sums the
         # mins, but the spread is what distinguishes external-load
         # interference (pass A >> pass B) from a real plan regression
-        # (both passes slow) — the round-5 2.27x false alarm in one field
+        # (both passes slow)
         "runs": runs,
         # fixed-work load probe before the headliners and at print
         # time: a loaded box inflates these, making the capture
         # self-adjudicating (see _calibrate)
-        "calibration_sec": cal,
-        "calibration_mt_sec": cal_mt,
+        "calibration_sec": [cal_before, _calibrate()],
+        "calibration_mt_sec": [cal_mt_before, _calibrate_mt()],
         # whole-interval CPU accounting: steal/iowait expose
         # disturbances the before/after probes cannot
-        "cpu_profile": cpu_profile,
-        # the canonical round-over-round number: same-session
-        # interleaved prev-round-vs-HEAD min-of-N, compact fields only
-        # (see _interleaved_field); single-session `value` above is
-        # the secondary capture
-        "interleaved": _interleaved_field(),
+        "cpu_profile": _cpu_profile(cpu0, _cpu_snap()),
         "sf": _sf_of(sf_dir),
     }
-    line = json.dumps(doc)
-    # Backstop, not the contract: the embed is compact by construction,
-    # but if a future field pushes past the budget, degrade to a
-    # still-parseable line instead of a truncated one. Drop order:
-    # interleave detail (ratio/file survive), then cpu_profile, then
-    # runs — `queries` and `value` are never dropped.
-    if len(line) > STDOUT_LINE_BUDGET and doc.get("interleaved"):
-        doc["interleaved"] = {
-            k: doc["interleaved"].get(k)
-            for k in ("file", "ratio", "runs", "prev_total_min",
-                      "head_total_min", "at_current_head")
-        }
-        line = json.dumps(doc)
-    for drop in ("cpu_profile", "runs"):
-        if len(line) <= STDOUT_LINE_BUDGET:
-            break
-        doc.pop(drop, None)
-        line = json.dumps(doc)
-    if len(line) > STDOUT_LINE_BUDGET:
-        print(f"bench: headline line {len(line)} chars exceeds "
-              f"{STDOUT_LINE_BUDGET} even after degrade", file=sys.stderr)
-    print(line)
+    print(json.dumps(doc))
 
 
 if __name__ == "__main__":

@@ -193,22 +193,26 @@ def run_to_memory(df: DataFrame, mode: str) -> DataFrame:
 
     name = f"mem_{uuid4().hex[:12]}"
     ckpt = _ephemeral_checkpoint(name)
-    with stream_partitions(df.sparkSession):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .outputMode(mode)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            LAST_PROGRESS.clear()
-            if q.lastProgress:
-                LAST_PROGRESS.update(q.lastProgress)
-            q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
+    try:
+        with stream_partitions(df.sparkSession):
+            q = (
+                df.writeStream.format("memory")
+                .queryName(name)
+                .option("checkpointLocation", ckpt)
+                .outputMode(mode)
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                LAST_PROGRESS.clear()
+                if q.lastProgress:
+                    LAST_PROGRESS.update(q.lastProgress)
+                q.stop()
+    finally:
+        # also when start() or stop() raises: Spark may already have
+        # created the directory
+        shutil.rmtree(ckpt, ignore_errors=True)
     return df.sparkSession.table(name)
 
 
@@ -554,18 +558,20 @@ def q_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uuid import uuid4 as _uuid4
 
     ckpt = _ephemeral_checkpoint(f"feb_{_uuid4().hex[:12]}")
-    with stream_partitions(spark):
-        q = (
-            agg.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
+    try:
+        with stream_partitions(spark):
+            q = (
+                agg.writeStream.foreachBatch(write_batch)
+                .option("checkpointLocation", ckpt)
+                .outputMode("complete")
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(out)
 
 

@@ -16,7 +16,10 @@ This test pins:
   attempt (attemptId >= 1) per query — zero means the refetch never
   happened and the receipt proves nothing;
 - row count + sha256 value hash equal the normal session's — a
-  refetch-recovered execution is indistinguishable in output.
+  refetch-recovered execution is indistinguishable in output;
+- every file the probe corrupted lies inside its own private local dir,
+  which is gone once the probe exits — the probe never touches another
+  Spark process's shuffle files (this session's included).
 """
 
 from __future__ import annotations
@@ -60,6 +63,16 @@ def test_fetch_failure_actually_fired(probe_results, name):
     r = probe_results[name]
     assert r["failed_task_delta"] >= 1, r
     assert r["resubmitted_stage_delta"] >= 1, r
+
+
+def test_probe_corrupts_only_its_own_local_dir(probe_results):
+    assert set(probe_results) == set(QUERIES)
+    for name, r in probe_results.items():
+        root = Path(r["local_dir"])
+        assert r["corrupted_paths"], r
+        outside = [p for p in r["corrupted_paths"] if not Path(p).is_relative_to(root)]
+        assert not outside, f"{name}: corrupted files outside {root}: {outside}"
+        assert not root.exists(), f"probe left its local dir {root} behind"
 
 
 @pytest.mark.parametrize("name", QUERIES)

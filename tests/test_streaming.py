@@ -1,5 +1,6 @@
 """Streaming layer: file-source replay, windows, watermark, dedup."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreducegcp_spark.sources.catalog import load_table
@@ -647,5 +648,33 @@ def test_ephemeral_checkpoint_root_and_cleanup(spark, monkeypatch, tmp_path):
     monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT_ROOT", str(tmp_path))
     out = ev.q_stream_tumbling_counts(spark, "/root/testdata/sf0.001")
     assert out.count() > 0
+    leftovers = [p for p in os.listdir(tmp_path) if p.startswith("mapreducegcp_ckpt_")]
+    assert leftovers == [], leftovers
+
+
+@pytest.mark.parametrize(
+    "query", ["q_stream_tumbling_counts", "q_stream_foreach_batch_sink"]
+)
+def test_checkpoint_removed_when_start_fails(spark, monkeypatch, tmp_path, query):
+    """A failing start() must not leak the checkpoint dir: the injected
+    failure raises only after Spark really started the query (and so
+    created its checkpoint dir), in both the memory-sink path
+    (run_to_memory) and the foreachBatch sink."""
+    import os
+
+    from pyspark.sql.streaming import DataStreamWriter
+
+    import mapreducegcp_spark.streaming.events as ev
+
+    real_start = DataStreamWriter.start
+
+    def failing_start(self, *args, **kwargs):
+        real_start(self, *args, **kwargs).stop()
+        raise RuntimeError("injected start failure")
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT_ROOT", str(tmp_path))
+    monkeypatch.setattr(DataStreamWriter, "start", failing_start)
+    with pytest.raises(RuntimeError, match="injected start failure"):
+        getattr(ev, query)(spark, SF_DIR)
     leftovers = [p for p in os.listdir(tmp_path) if p.startswith("mapreducegcp_ckpt_")]
     assert leftovers == [], leftovers

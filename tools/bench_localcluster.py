@@ -7,7 +7,7 @@ reads served from the in-process block manager, zero serialization of
 shuffle blocks across process boundaries. A real cluster pays netty
 transfer + kryo/unsafe row serialization on every exchange. This tool
 re-times the 18 headline queries (same ``bench._run`` convention:
-min-of-2 warm, noop sink, same raw-plan overrides) on
+min-of-2 warm, noop sink) on
 ``local-cluster[4,8,3072]`` — 4 separate executor JVMs x 8 cores, the
 same 32 total cores as the committed numbers — so the artifact pair
 isolates exactly one variable: the shuffle/serialization boundary.
@@ -57,18 +57,16 @@ def main() -> None:
         .getOrCreate()
     )
 
-    from bench import HEADLINE, _calibrate, _calibrate_mt, _raw_overrides, _run, _sf_of
+    from bench import HEADLINE, _calibrate, _calibrate_mt, _run, _sf_of
     from mapreducegcp_spark.registry import all_queries
 
     catalog = all_queries()
-    raw = _raw_overrides()
     cal0, cal_mt0 = _calibrate(), _calibrate_mt()
 
     _run(catalog["wordcount"].fn, spark, sf_dir)  # warm executors + scans
     runs: dict[str, list[float]] = {}
     for name in HEADLINE:
-        fn = raw.get(name) or catalog[name].fn
-        runs[name] = [round(_run(fn, spark, sf_dir), 3) for _ in range(2)]
+        runs[name] = [round(_run(catalog[name].fn, spark, sf_dir), 3) for _ in range(2)]
         print(f"{name}: {min(runs[name]):.3f}s {runs[name]}", file=sys.stderr, flush=True)
 
     best = {k: min(v) for k, v in runs.items()}

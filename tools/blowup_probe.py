@@ -249,11 +249,10 @@ def run(spark: SparkSession, sf_dir: str, big_dir: str, factor: int) -> None:
     # reuse bench's exact timing convention (_run: perf_counter around a
     # noop-sink write) so these numbers stay comparable to the bench
     # tables they sit next to in SCALE.md
-    from bench import HEADLINE, _raw_overrides, _run
+    from bench import HEADLINE, _run
     from mapreducegcp_spark.registry import all_queries
 
     catalog = all_queries()
-    raw = _raw_overrides()
     skip = EXCLUDE.get(factor, {})
 
     # warmup both directions
@@ -267,7 +266,7 @@ def run(spark: SparkSession, sf_dir: str, big_dir: str, factor: int) -> None:
         if name in skip:
             print(f"| `{name}` | — | — | excluded: {skip[name]} |")
             continue
-        fn = raw.get(name) or catalog[name].fn
+        fn = catalog[name].fn
         t1 = min(_run(fn, spark, sf_dir) for _ in range(2))
         tN = min(_run(fn, spark, big_dir) for _ in range(2))
         rows[name] = (round(t1, 2), round(tN, 2), round(tN / t1, 1))
@@ -404,18 +403,17 @@ def skew_receipt(spark: SparkSession, big_dir: str) -> None:
 
 
 def run_skew(spark: SparkSession, sf_dir: str, big_dir: str, factor: int) -> None:
-    from bench import _raw_overrides, _run
+    from bench import _run
     from mapreducegcp_spark.registry import all_queries
 
     catalog = all_queries()
-    raw = _raw_overrides()
     for d in (sf_dir, big_dir):
         _run(catalog["wordcount"].fn, spark, d)
     rows = {}
     print(f"| query | t_1x (s) | t_{factor}x-skew (s) | ratio |")
     print("|---|---|---|---|")
     for name in SKEW_QUERIES:
-        fn = raw.get(name) or catalog[name].fn
+        fn = catalog[name].fn
         t1 = min(_run(fn, spark, sf_dir) for _ in range(2))
         tN = min(_run(fn, spark, big_dir) for _ in range(2))
         rows[name] = (round(t1, 2), round(tN, 2), round(tN / t1, 1))

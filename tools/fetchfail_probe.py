@@ -14,6 +14,12 @@ re-runs the fetch. This probe executes that path deterministically:
 - master ``local-cluster[2,2,1536]`` — real separate executor JVMs
   with their own block managers and shuffle files (plain ``local``
   cannot lose a fetch: reads are direct file access);
+- a private local dir (``tempfile.mkdtemp``, exported as
+  ``SPARK_LOCAL_DIRS`` before the JVM starts — it overrides
+  ``spark.local.dir``) holds every block-manager dir of the driver and
+  both executors, so the corruption below can only ever touch this
+  probe's own shuffle files, never another Spark process's; it is
+  removed on exit;
 - per query, pin the physical RDD (``df.rdd``) and materialize every
   shuffle with ``count()`` — re-running an action on the SAME RDD
   reuses registered map outputs instead of replanning new shuffles;
@@ -27,8 +33,9 @@ re-runs the fetch. This probe executes that path deterministically:
   session's (tests/test_fetchfail.py compares).
 
 Per query it prints one JSON line with rows, sha256, the delta of
-scheduler-recorded failed tasks, and the delta of stage entries with
-attemptId >= 1 (a resubmitted stage attempt). Zero deltas mean the
+scheduler-recorded failed tasks, the delta of stage entries with
+attemptId >= 1 (a resubmitted stage attempt), the private local dir
+and every file it corrupted. Zero deltas mean the
 injection never fired and the receipt proves nothing — the test pins
 both.
 
@@ -55,7 +62,9 @@ import hashlib
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -103,19 +112,16 @@ def _stage_stats(spark) -> tuple[int, int]:
     return failed, resubmitted
 
 
-def _corrupt_shuffles() -> tuple[int, int]:
-    """Overwrite every shuffle .data file across all executor
-    block-manager dirs — whichever shuffle the result stage refetches,
-    it hits damage; stages whose outputs live in localCheckpoint
-    blocks recompute from those, so the resubmission cascade is only
-    as deep as the actual lineage. Returns (shuffle ids, files hit)."""
-    pats = [
-        "/tmp/spark-*/executor-*/blockmgr-*/*/shuffle_*.data",
-        "/tmp/spark-*/blockmgr-*/*/shuffle_*.data",
-    ]
-    files = [f for p in pats for f in glob.glob(p)]
+def _corrupt_shuffles(local_dir: str) -> tuple[int, list[str]]:
+    """Overwrite every shuffle .data file under ``local_dir`` (the
+    probe's private local dir: all executor block-manager dirs live
+    below it) — whichever shuffle the result stage refetches, it hits
+    damage; stages whose outputs live in localCheckpoint blocks
+    recompute from those, so the resubmission cascade is only as deep
+    as the actual lineage. Returns (shuffle ids, files hit)."""
+    files = sorted(glob.glob(os.path.join(local_dir, "**", "shuffle_*.data"), recursive=True))
     ids: set[int] = set()
-    hit = 0
+    hit: list[str] = []
     for f in files:
         m = re.match(r"shuffle_(\d+)_", os.path.basename(f))
         if not m:
@@ -126,14 +132,25 @@ def _corrupt_shuffles() -> tuple[int, int]:
         with open(f, "r+b") as fh:
             fh.write(b"\xde\xad\xbe\xef" * max(1, sz // 8))
         ids.add(int(m.group(1)))
-        hit += 1
+        hit.append(f)
     if not hit:
-        raise RuntimeError("no shuffle .data files found to corrupt")
+        raise RuntimeError(f"no shuffle .data files found to corrupt under {local_dir}")
     return len(ids), hit
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    local_dir = tempfile.mkdtemp(prefix="fetchfail-probe-")
+    # read by the driver JVM, the local-cluster worker and both
+    # executors; set before the first SparkSession launches the JVM
+    os.environ["SPARK_LOCAL_DIRS"] = local_dir
+    try:
+        return _probe(sf_dir, local_dir)
+    finally:
+        shutil.rmtree(local_dir, ignore_errors=True)
+
+
+def _probe(sf_dir: str, local_dir: str) -> int:
     from pyspark.sql import SparkSession
 
     repo = str(Path(__file__).resolve().parent.parent)
@@ -151,31 +168,36 @@ def main() -> int:
     from mapreducegcp_spark.registry import all_queries
 
     qs = all_queries()
-    for name in QUERIES:
-        # pin the physical RDD: a second action on the SAME RDD reuses
-        # the registered map outputs (a fresh df action would replan
-        # brand-new shuffle ids and never refetch the damaged files)
-        rdd = qs[name].fn(spark, sf_dir).rdd
-        rdd.count()
-        failed0, resub0 = _stage_stats(spark)
-        n_ids, hit = _corrupt_shuffles()
-        rows = rdd.collect()
-        n, digest = row_hash_rows(rows)
-        failed1, resub1 = _stage_stats(spark)
-        print(
-            json.dumps(
-                {
-                    "query": name,
-                    "rows": n,
-                    "sha256": digest,
-                    "corrupted_shuffle_ids": n_ids,
-                    "corrupted_files": hit,
-                    "failed_task_delta": failed1 - failed0,
-                    "resubmitted_stage_delta": resub1 - resub0,
-                }
-            ),
-            flush=True,
-        )
+    try:
+        for name in QUERIES:
+            # pin the physical RDD: a second action on the SAME RDD reuses
+            # the registered map outputs (a fresh df action would replan
+            # brand-new shuffle ids and never refetch the damaged files)
+            rdd = qs[name].fn(spark, sf_dir).rdd
+            rdd.count()
+            failed0, resub0 = _stage_stats(spark)
+            n_ids, hit = _corrupt_shuffles(local_dir)
+            rows = rdd.collect()
+            n, digest = row_hash_rows(rows)
+            failed1, resub1 = _stage_stats(spark)
+            print(
+                json.dumps(
+                    {
+                        "query": name,
+                        "rows": n,
+                        "sha256": digest,
+                        "local_dir": local_dir,
+                        "corrupted_shuffle_ids": n_ids,
+                        "corrupted_paths": hit,
+                        "failed_task_delta": failed1 - failed0,
+                        "resubmitted_stage_delta": resub1 - resub0,
+                    }
+                ),
+                flush=True,
+            )
+    finally:
+        # stop the executors before the caller removes their dirs
+        spark.stop()
     return 0
 
 

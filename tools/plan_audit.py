@@ -18,7 +18,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from bench import HEADLINE, _raw_overrides
+from bench import HEADLINE
 from mapreducegcp_spark.registry import all_queries
 from mapreducegcp_spark.session import get_spark
 
@@ -48,17 +48,12 @@ def main() -> None:
     qs = all_queries()
     print("| query | exchanges | broadcast joins | sort-merge joins | pushed-filter scans | widest scan (cols) |")
     print("|---|---|---|---|---|---|")
-    # Audit the same plan the bench times: for similarity_ann_ivf the
-    # registered query is the recall GATE (raw ANN + exact + semi join
-    # — a correctness harness, not the serving plan); the raw override
-    # is the physical ANN plan whose scale shape this table vouches for.
-    raw = _raw_overrides()
     for name in HEADLINE:
         rq = qs.get(name)
-        if rq is None and name not in raw:
+        if rq is None:
             continue
         try:
-            a = audit(name, raw.get(name) or rq.fn, spark, args.sf_dir)
+            a = audit(name, rq.fn, spark, args.sf_dir)
         except Exception as ex:  # streaming queries have no batch plan
             print(f"| `{name}` | (not statically plannable: {type(ex).__name__}) | | | | |")
             continue

@@ -19,7 +19,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from bench import HEADLINE, _raw_overrides
+from bench import HEADLINE
 from mapreducegcp_spark.registry import all_queries
 from mapreducegcp_spark.session import get_spark, sf_dir_from_env
 
@@ -45,12 +45,10 @@ def main() -> None:
 
     spark = get_spark("plan-capture")
     catalog = all_queries()
-    raw = _raw_overrides()
     names = args.names or list(HEADLINE)
     for name in names:
-        fn = raw.get(name) or catalog[name].fn
         try:
-            plan = formatted_plan(fn(spark, sf_dir))
+            plan = formatted_plan(catalog[name].fn(spark, sf_dir))
         except Exception as e:  # noqa: BLE001 — capture what we can
             print(f"plan_capture: {name} failed: {e}", file=sys.stderr)
             continue

@@ -17,7 +17,6 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from bench import _raw_overrides
 from mapreducegcp_spark.registry import all_queries
 from mapreducegcp_spark.session import get_spark, sf_dir_from_env
 
@@ -32,13 +31,12 @@ def main() -> None:
     sf_dir = args.sf_dir or sf_dir_from_env()
     spark = get_spark("qtime")
     catalog = all_queries()
-    raw = _raw_overrides()
     # warmup: JVM + codegen startup paid outside the timings
     catalog["wordcount"].fn(spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
     for name in args.names:
-        fn = raw.get(name) or catalog[name].fn
+        fn = catalog[name].fn
         runs = []
         for _ in range(args.n):
             t0 = time.perf_counter()

@@ -22,7 +22,6 @@ Boundary classes:
                substitute (SCALE.md boundary rows).
 - ``artifact`` needs a committed artifact that appears later in the
                round (self-resolving).
-- ``checkout`` needs git history a fresh clone may not have.
 
     python tools/skips_audit.py          # print table + verdict
     python tools/skips_audit.py --md     # emit SKIPS.md content
@@ -78,13 +77,6 @@ REGISTER: list[tuple[str, str, str]] = [
         "artifact",
         "validates the round's emitted sweep artifact once committed "
         "(self-resolving within the round)",
-    ),
-    (
-        r"no round-boundary commit",
-        "checkout",
-        "git-derived recheck tier needs a 'round N:' commit; a fresh "
-        "clone without driver history skips the integration assert "
-        "(unit coverage remains)",
     ),
 ]
 

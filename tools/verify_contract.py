@@ -14,9 +14,8 @@ real consumer would use, then:
 1. entry smoke: > 0 rows, stable schema;
 2. contract: set(queries()) == set(oracle_sql());
 3. strict compare (sorted column names, sorted repr'd row multisets —
-   the driver's method) for the ROTATION FRONT (the stalest-evidence /
-   recheck-tier queries the driver will check next) plus any names
-   passed on the command line;
+   the driver's method) for the first ``--front`` catalog queries
+   (registration order) plus any names passed on the command line;
 4. edge probes: nonexistent sf_dir raises cleanly, empty literal
    corpus yields empty wordcount, unknown table -> KeyError.
 
@@ -48,7 +47,7 @@ def main() -> int:
     ap.add_argument("names", nargs="*", help="extra queries to strict-compare")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--front", type=int, default=12,
-                    help="how many rotation-front queries to compare")
+                    help="how many leading catalog queries to compare")
     ap.add_argument("--_inner", action="store_true", help=argparse.SUPPRESS)
     args = ap.parse_args()
 
