@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mapreducegcp_spark.functions.checkpoint import safe_checkpoint
+from mapreducegcp_spark.functions.memo import memo, stamp
 from mapreducegcp_spark.functions.text import TOKEN_ORACLE_EXPR, tokens
 from mapreducegcp_spark.functions.vectors import blas_pair_candidates, dot, l2_norm
 from mapreducegcp_spark.registry import register
@@ -266,27 +267,12 @@ def q_dedup_ngram_jaccard(
 
 # ----------------------------------------- shared near-dup pair graph
 
-# Session-scoped cache of the exact Jaccard pair graph: six catalog
-# queries (three cluster engines, the keep manifest, the LSH eval, the
-# leakage audit/split) consume the IDENTICAL (doc_a, doc_b) edge set,
-# and each was re-running the same ~2-4 s shingle self-join. Mirrors
-# the IVF centroid artifact contract (similarity.py): keyed by corpus
-# path + documents.parquet byte size, so a regenerated corpus at the
-# same path (same name, different bytes) misses the cache instead of
-# silently serving stale pairs. Entries are lazily-checkpointed
-# DataFrames — one bounded materialization per (session, corpus),
-# valid only within the SparkSession that built them, hence the
-# applicationId in the key.
-_PAIR_GRAPH_CACHE: dict[tuple, DataFrame] = {}
-_GROUP_MAP_CACHE: dict[tuple, DataFrame] = {}
-
 
 def exact_group_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(rep, member) verbatim-duplicate group map over sha256(text):
     rep = min doc_id of the group, one row per document. The
-    exact-collapse pre-pass of dedup_minhash_lsh consumes it; cached
-    per (session, corpus) with the same freshness key discipline as
-    the pair-graph cache above, so repeated LSH consumers (bench
+    exact-collapse pre-pass of dedup_minhash_lsh consumes it; memoized
+    per corpus (functions/memo.py), so repeated LSH consumers (bench
     min-of-2, dedup_lsh_eval after dedup_minhash_lsh) pay the
     doc-sized window shuffle once. One exchange total: min(doc_id)
     OVER (PARTITION BY hash) replaces the earlier groupBy+join pair.
@@ -296,7 +282,6 @@ def exact_group_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     hex digest): sha2(NULL) is NULL, and grouping all NULL-text docs
     together would tell a (rep, member) consumer that distinct
     empty documents are verbatim duplicates of each other."""
-    import os
 
     def build() -> DataFrame:
         docs_h = load_table(spark, sf_dir, "documents").select(
@@ -318,18 +303,7 @@ def exact_group_map(spark: SparkSession, sf_dir: str) -> DataFrame:
             eager=False,
         )
 
-    path = os.path.normpath(sf_dir)
-    try:
-        st = os.stat(os.path.join(path, "documents.parquet"))
-    except OSError:
-        return build()
-    key = (spark.sparkContext.applicationId, path, st.st_size, st.st_mtime_ns)
-    if key not in _GROUP_MAP_CACHE:
-        _GROUP_MAP_CACHE[key] = build()
-    return _GROUP_MAP_CACHE[key]
-
-
-_HAS_DUPS_CACHE: dict[tuple, bool] = {}
+    return memo(spark, "exact_group_map", sf_dir, stamp(sf_dir, ("documents",)), build)
 
 
 def has_verbatim_dups(spark: SparkSession, sf_dir: str) -> bool:
@@ -338,11 +312,8 @@ def has_verbatim_dups(spark: SparkSession, sf_dir: str) -> bool:
     dedup_minhash_lsh uses it to skip the exact-collapse expansion
     joins entirely on duplicate-free corpora (the common case for an
     already-cleaned corpus) — the group map is computed either way, so
-    the decision costs one limit-1 scan, cached per (session, corpus)
-    with the same freshness key as the map itself. When the corpus
-    file cannot be statted the cache is bypassed, mirroring
-    exact_group_map."""
-    import os
+    the decision costs one limit-1 scan, memoized like the map
+    itself."""
 
     members = exact_group_map(spark, sf_dir)
 
@@ -351,15 +322,7 @@ def has_verbatim_dups(spark: SparkSession, sf_dir: str) -> bool:
             members.where(F.col("member") != F.col("rep")).limit(1).take(1)
         )
 
-    path = os.path.normpath(sf_dir)
-    try:
-        st = os.stat(os.path.join(path, "documents.parquet"))
-    except OSError:
-        return probe()
-    key = (spark.sparkContext.applicationId, path, st.st_size, st.st_mtime_ns)
-    if key not in _HAS_DUPS_CACHE:
-        _HAS_DUPS_CACHE[key] = probe()
-    return _HAS_DUPS_CACHE[key]
+    return memo(spark, "has_verbatim_dups", sf_dir, stamp(sf_dir, ("documents",)), probe)
 
 
 def jaccard_pair_graph(
@@ -371,13 +334,10 @@ def jaccard_pair_graph(
     consumer. ``shingle_rows`` lets the first builder in a query that
     also needs raw shingles (dedup_lsh_eval) feed one shared scan.
 
-    When the corpus file cannot be statted (tests monkeypatch
-    ``load_table`` and pass placeholder sf_dirs, so the data comes
-    from somewhere the key cannot see), the cache is BYPASSED — serving
-    a cached graph for an unidentifiable corpus is how a sharing cache
-    silently corrupts results. The key carries byte size AND mtime so
-    a regenerated same-size corpus at the same path misses too."""
-    import os
+    Six catalog queries (three cluster engines, the keep manifest, the
+    LSH eval, the leakage audit/split) consume this identical edge set;
+    without the memo (functions/memo.py) each re-ran the same ~2-4 s
+    shingle self-join."""
 
     def build() -> DataFrame:
         # safe_checkpoint: near-dup pair streams concentrate a hot
@@ -390,15 +350,7 @@ def jaccard_pair_graph(
             eager=False,
         )
 
-    path = os.path.normpath(sf_dir)
-    try:
-        st = os.stat(os.path.join(path, "documents.parquet"))
-    except OSError:
-        return build()
-    key = (spark.sparkContext.applicationId, path, st.st_size, st.st_mtime_ns)
-    if key not in _PAIR_GRAPH_CACHE:
-        _PAIR_GRAPH_CACHE[key] = build()
-    return _PAIR_GRAPH_CACHE[key]
+    return memo(spark, "jaccard_pair_graph", sf_dir, stamp(sf_dir, ("documents",)), build)
 
 
 # ------------------------------------------------- MinHash + LSH

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mapreducegcp_spark.functions.exact import dec2, dsum, o_dec2, o_dsum
+from mapreducegcp_spark.functions.memo import memo, stamp
 from mapreducegcp_spark.registry import register
 from mapreducegcp_spark.sources.catalog import load_table
 
@@ -1328,36 +1329,15 @@ FROM h GROUP BY root_region, depth
 """
 
 
-# sql_recursive_cte_hierarchy's recursion-cap inputs: total node count
-# per (session, corpus), keyed like dedup's group-map cache (path +
-# byte size + mtime of each hierarchy table) so a regenerated corpus
-# at the same path misses instead of silently serving a stale count.
-_HIERARCHY_NODES_CACHE: dict[tuple, int] = {}
-
-
 def _hierarchy_node_count(spark: SparkSession, sf_dir: str) -> int:
-    import os
-
-    def count_nodes() -> int:
-        return sum(
-            load_table(spark, sf_dir, t).count()
-            for t in ("region", "nation", "supplier", "customer")
-        )
-
-    path = os.path.normpath(sf_dir)
-    stats = []
-    for t in ("region", "nation", "supplier", "customer"):
-        try:
-            st = os.stat(os.path.join(path, f"{t}.parquet"))
-        except OSError:
-            # unstattable corpus (monkeypatched load_table in tests):
-            # bypass the cache rather than risk serving a stale count
-            return count_nodes()
-        stats.append((st.st_size, st.st_mtime_ns))
-    key = (spark.sparkContext.applicationId, path, tuple(stats))
-    if key not in _HIERARCHY_NODES_CACHE:
-        _HIERARCHY_NODES_CACHE[key] = count_nodes()
-    return _HIERARCHY_NODES_CACHE[key]
+    """Total node count of the region/nation/supplier/customer
+    hierarchy: sql_recursive_cte_hierarchy's recursion-cap input,
+    memoized per corpus (functions/memo.py)."""
+    tables = ("region", "nation", "supplier", "customer")
+    return memo(
+        spark, "hierarchy_nodes", sf_dir, stamp(sf_dir, tables),
+        lambda: sum(load_table(spark, sf_dir, t).count() for t in tables),
+    )
 
 
 @register("sql_recursive_cte_hierarchy", oracle=_RCTE_ORACLE, tags=("relational",))

@@ -24,11 +24,7 @@ hash-match the DuckDB fold bit-for-bit.
 
 from __future__ import annotations
 
-import json
-import logging
 import math
-import os
-from pathlib import Path
 
 import pandas as pd
 
@@ -36,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mapreducegcp_spark.functions.memo import artifact, memo, stamp
 from mapreducegcp_spark.functions.vectors import blas_pair_candidates, cosine, dot, l2_norm
 from mapreducegcp_spark.registry import register
 from mapreducegcp_spark.sources.catalog import load_table
@@ -297,9 +294,6 @@ def lsh_params(n: int, p: float = _LSH_DESIGN_P) -> tuple[int, int, int]:
 _LSH_CAL_SAMPLES = 64  # calibration sample size (deterministic hash pick)
 
 
-_CALIBRATION_CACHE: dict[str, dict] = {}
-
-
 def ann_calibration(spark: SparkSession, sf_dir: str) -> dict:
     """Ingest-time ANN ground-truth sample: ~64 corpus vectors picked
     by deterministic id hash, each with its exact top-k neighbors
@@ -310,37 +304,29 @@ def ann_calibration(spark: SparkSession, sf_dir: str) -> dict:
     module derives — the LSH design cosine (lsh_design_p), the PQ
     re-rank budget (pq_cand_calibrated) and the IVF probe depth
     (ivf_nprobe_calibrated) — the same held-out-sample tuning loop
-    FAISS's autotune runs, cached per (corpus path, payload bytes)
-    like the quantizer artifacts. Returns {} for corpora too small to
+    FAISS's autotune runs, persisted as an artifact (functions/memo.py)
+    like the quantizers. Returns {} for corpora too small to
     sample; consumers fall back to their size-only derivations.
 
     Shape: {"sample_ids": [..], "sample_vecs": [[..]..],
     "topk": {sample_id: [(vec_id, cos), .. <=k]}}."""
+    return artifact(
+        spark, "anncal", sf_dir, "embeddings", f"_k{_TOP_K}_s{_LSH_CAL_SAMPLES}",
+        lambda: _calibration_compute(spark, sf_dir),
+        decode=lambda doc: {
+            "sample_ids": doc["sample_ids"],
+            "sample_vecs": doc["sample_vecs"],
+            "topk": {
+                int(k): [(int(v), float(c)) for v, c in vs]
+                for k, vs in doc["topk"].items()
+            },
+        } if doc else {},
+    )
+
+
+def _calibration_compute(spark: SparkSession, sf_dir: str) -> dict:
     import numpy as np
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (
-        f"anncal_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_b{_corpus_bytes(path)}_k{_TOP_K}_s{_LSH_CAL_SAMPLES}"
-        if os.path.exists(path)
-        else None  # synthetic corpus (tests): compute, never cache
-    )
-    if key is not None and key in _CALIBRATION_CACHE:
-        return _CALIBRATION_CACHE[key]
-    if key is not None:
-        apath = _ARTIFACT_DIR / f"{key}.json"
-        if apath.exists():
-            doc = json.loads(apath.read_text())
-            cal = {
-                "sample_ids": doc["sample_ids"],
-                "sample_vecs": doc["sample_vecs"],
-                "topk": {
-                    int(k): [(int(v), float(c)) for v, c in vs]
-                    for k, vs in doc["topk"].items()
-                },
-            }
-            _CALIBRATION_CACHE[key] = cal
-            return cal
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = emb.filter(~F.col("vec_id").isin(*_QUERY_IDS))
     n = corpus_count(spark, sf_dir)
@@ -356,8 +342,6 @@ def ann_calibration(spark: SparkSession, sf_dir: str) -> dict:
         .collect()
     ]
     if not sample:
-        if key is not None:
-            _CALIBRATION_CACHE[key] = {}
         return {}
     S = np.asarray([v for _, v in sample], dtype=np.float64)
     Sn = S / np.maximum(np.linalg.norm(S, axis=1, keepdims=True), 1e-12)
@@ -404,31 +388,11 @@ def ann_calibration(spark: SparkSession, sf_dir: str) -> dict:
         topk.setdefault(int(r["sample_id"]), []).append(
             (int(r["vec_id"]), float(r["cos"]))
         )
-    cal = {
+    return {
         "sample_ids": [i for i, _ in sample],
         "sample_vecs": [v for _, v in sample],
         "topk": topk,
     }
-    if key is not None:
-        _CALIBRATION_CACHE[key] = cal
-        try:  # persist next to the quantizer artifacts (ingest-time stat)
-            _ARTIFACT_DIR.mkdir(parents=True, exist_ok=True)
-            (_ARTIFACT_DIR / f"{key}.json").write_text(
-                json.dumps(
-                    {
-                        "sample_ids": cal["sample_ids"],
-                        "sample_vecs": cal["sample_vecs"],
-                        "topk": {str(k): v for k, v in topk.items()},
-                    }
-                )
-            )
-        except OSError as e:
-            logging.getLogger(__name__).warning(
-                "ann calibration artifact not persisted (%s); "
-                "next process re-measures",
-                e,
-            )
-    return cal
 
 
 def lsh_design_p(spark: SparkSession, sf_dir: str) -> float:
@@ -693,84 +657,18 @@ def train_ivf_centroids(
     return C.tolist()
 
 
-# Trained quantizers are INDEX ARTIFACTS: built once per corpus (like
-# any ANN index), persisted as JSON next to the package, and loaded by
-# queries. Keyed by corpus directory basename + hyperparameters;
-# deterministic training makes the artifacts reproducible from the
-# data. tools/build_ivf_index.py rebuilds them.
-_ARTIFACT_DIR = Path(__file__).resolve().parent.parent / "artifacts"
-_CENTROID_CACHE: dict[str, list[list[float]]] = {}
-
-
-def _corpus_bytes(path: str) -> int:
-    """Total payload bytes of a parquet table at ``path``, for the
-    artifact freshness keys below. A table may be a single FILE or a
-    DIRECTORY of part files (tools/blowup_probe.py layout) —
-    ``os.path.getsize`` on a directory returns the inode size (4096
-    on ext4), which is the same for EVERY directory: a regenerated
-    corpus at the same path would silently reuse stale centroids, the
-    exact no-signal failure the size key exists to prevent. Sum the
-    entries instead."""
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in sorted(os.listdir(path))
-            if os.path.isfile(os.path.join(path, f))
-        )
-    return os.path.getsize(path)
-
-
-def _tuned_scalar(key: str | None, cache: dict, compute) -> int:
-    """Shared persistence path for the tuned ANN scalars (PQ re-rank
-    budget, IVF probe depth): in-process cache -> on-disk artifact
-    (_ARTIFACT_DIR/<key>.json) -> compute + persist — the SAME
-    contract as the anncal/centroid artifacts, so a new process never
-    re-pays the full-corpus calibration scan the scalar was derived
-    from (the PQ budget alone is an n x 64 ADC crossJoin). ``key`` is
-    None for unstattable corpora (tests with monkeypatched
-    load_table): compute every time, never cache or persist."""
-    if key is not None and key in cache:
-        return cache[key]
-    if key is not None:
-        path = _ARTIFACT_DIR / f"{key}.json"
-        if path.exists():
-            v = int(json.loads(path.read_text()))
-            cache[key] = v
-            return v
-    v = int(compute())
-    if key is not None:
-        try:
-            _ARTIFACT_DIR.mkdir(parents=True, exist_ok=True)
-            (_ARTIFACT_DIR / f"{key}.json").write_text(json.dumps(v))
-        except OSError as e:
-            logging.getLogger(__name__).warning(
-                "tuned scalar %s not persisted (%s); the next process "
-                "re-pays its calibration scan", key, e
-            )
-        cache[key] = v
-    return v
-
-
-_COUNT_CACHE: dict[str, int] = {}
-
-
 def corpus_count(spark: SparkSession, sf_dir: str) -> int:
     """Row count of the ``embeddings`` corpus at ``sf_dir`` — THE corpus
     statistic the ANN hyperparameter derivations below key on.
 
-    Cached per (directory, payload bytes) like the centroid artifacts:
-    one parquet metadata-level count per corpus per process, so the
-    adaptive plans never pay a per-invocation scan. At production scale
-    this is catalog metadata (table statistics), not a query."""
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(p):
-        # synthetic corpus (tests monkeypatch load_table): no on-disk
-        # freshness key exists, so never cache
-        return load_table(spark, sf_dir, "embeddings").count()
-    key = f"{os.path.normpath(sf_dir)}:{_corpus_bytes(p)}"
-    if key not in _COUNT_CACHE:
-        _COUNT_CACHE[key] = load_table(spark, sf_dir, "embeddings").count()
-    return _COUNT_CACHE[key]
+    Memoized per corpus (functions/memo.py): one parquet metadata-level
+    count per corpus per session, so the adaptive plans never pay a
+    per-invocation scan. At production scale this is catalog metadata
+    (table statistics), not a query."""
+    return memo(
+        spark, "embeddings_count", sf_dir, stamp(sf_dir, ("embeddings",)),
+        lambda: load_table(spark, sf_dir, "embeddings").count(),
+    )
 
 
 def ivf_centroids(
@@ -784,38 +682,15 @@ def ivf_centroids(
 
     Training per query invocation was 3.7s of every similarity_ann_ivf
     call; an IVF index at scale is trained once when the corpus is
-    ingested and shipped as a (k, dim) artifact — this mirrors that.
+    ingested and shipped as a (k, dim) artifact (functions/memo.py) —
+    this mirrors that. Training is deterministic, so the artifact is
+    reproducible from the data; tools/build_ivf_index.py rebuilds it."""
 
-    The key carries the corpus BYTE SIZE alongside the directory name:
-    an index is only valid for the exact corpus it was trained on, and
-    the driver regenerates testdata between rounds — a name-only key
-    would silently serve centroids trained on the previous corpus
-    (same path, different bytes) and degrade recall with no signal."""
-    emb_bytes = _corpus_bytes(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (
-        f"ivf_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_b{emb_bytes}_k{k}_i{iters}"
-    )
-    if key in _CENTROID_CACHE:
-        return _CENTROID_CACHE[key]
-    path = _ARTIFACT_DIR / f"{key}.json"
-    if path.exists():
-        C = json.loads(path.read_text())
-    else:
+    def train() -> list[list[float]]:
         emb = load_table(spark, sf_dir, "embeddings")
-        C = train_ivf_centroids(emb.filter(~F.col("vec_id").isin(*_QUERY_IDS)), k, iters)
-        try:
-            _ARTIFACT_DIR.mkdir(parents=True, exist_ok=True)
-            path.write_text(json.dumps(C))
-        except OSError as e:
-            # read-only checkout: the in-memory cache still serves this
-            # process, but log it — a silent miss here means every NEW
-            # process retrains (ADVICE r6)
-            logging.getLogger(__name__).warning(
-                "ivf centroid artifact not persisted (%s); next process retrains", e
-            )
-    _CENTROID_CACHE[key] = C
-    return C
+        return train_ivf_centroids(emb.filter(~F.col("vec_id").isin(*_QUERY_IDS)), k, iters)
+
+    return artifact(spark, "ivf", sf_dir, "embeddings", f"_k{k}_i{iters}", train)
 
 
 LSH_RECALL_FLOOR = 0.85  # measured 0.98 at sf0.01 with derived params (r7)
@@ -863,9 +738,6 @@ register("similarity_ann_lsh", oracle=_RECALL_ORACLE, tags=("llm-pipeline",))(
 )
 
 
-_NPROBE_CACHE: dict[str, int] = {}
-
-
 def ivf_nprobe_calibrated(spark: SparkSession, sf_dir: str, C) -> int:
     """Probe depth measured on the calibration sample: for each
     sampled vector, how deep into ITS ranked centroid list do the
@@ -877,19 +749,12 @@ def ivf_nprobe_calibrated(spark: SparkSession, sf_dir: str, C) -> int:
 
     All arithmetic is driver-side numpy over the bounded sample
     (64 queries x k neighbors x nlist centroids); the only Spark work
-    is one bounded collect of the neighbors' embeddings. Persisted to
-    _ARTIFACT_DIR like the centroids it belongs with (_tuned_scalar),
-    keyed on corpus basename + payload bytes + nlist."""
-    nlist = len(C)
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (
-        f"nprobe_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_b{_corpus_bytes(path)}_k{nlist}"
-        if os.path.exists(path)
-        else None
-    )
-    return _tuned_scalar(
-        key, _NPROBE_CACHE, lambda: _nprobe_compute(spark, sf_dir, C)
+    is one bounded collect of the neighbors' embeddings. Persisted as
+    an artifact (functions/memo.py) like the centroids it belongs
+    with."""
+    return artifact(
+        spark, "nprobe", sf_dir, "embeddings", f"_k{len(C)}",
+        lambda: int(_nprobe_compute(spark, sf_dir, C)), decode=int,
     )
 
 
@@ -1339,29 +1204,15 @@ def train_pq_codebooks(
 
 def pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     """Load (or train-and-persist) the PQ codebooks for ``sf_dir`` —
-    the same corpus-size-keyed artifact contract as ``ivf_centroids``."""
-    emb_bytes = _corpus_bytes(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (
-        f"pq_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_b{emb_bytes}_m{_PQ_M}_k{_PQ_K}_i{_PQ_ITERS}"
-    )
-    if key in _CENTROID_CACHE:
-        return _CENTROID_CACHE[key]
-    path = _ARTIFACT_DIR / f"{key}.json"
-    if path.exists():
-        CB = json.loads(path.read_text())
-    else:
+    the same artifact contract as ``ivf_centroids``."""
+
+    def train() -> list:
         emb = load_table(spark, sf_dir, "embeddings")
-        CB = train_pq_codebooks(emb.filter(~F.col("vec_id").isin(*_QUERY_IDS)))
-        try:
-            _ARTIFACT_DIR.mkdir(parents=True, exist_ok=True)
-            path.write_text(json.dumps(CB))
-        except OSError as e:
-            logging.getLogger(__name__).warning(
-                "pq codebook artifact not persisted (%s); next process retrains", e
-            )
-    _CENTROID_CACHE[key] = CB
-    return CB
+        return train_pq_codebooks(emb.filter(~F.col("vec_id").isin(*_QUERY_IDS)))
+
+    return artifact(
+        spark, "pq", sf_dir, "embeddings", f"_m{_PQ_M}_k{_PQ_K}_i{_PQ_ITERS}", train
+    )
 
 
 def _pq_encode_udf(CB):
@@ -1418,9 +1269,6 @@ def _pq_lut_udf(CB):
     return lut
 
 
-_PQ_BUDGET_CACHE: dict[str, int] = {}
-
-
 def pq_cand_calibrated(spark: SparkSession, sf_dir: str) -> int:
     """Re-rank budget measured end-to-end on the calibration sample:
     run the REAL ADC scan (same codebooks, same fold) with the ~64
@@ -1430,20 +1278,13 @@ def pq_cand_calibrated(spark: SparkSession, sf_dir: str) -> int:
     cover, no noise model in between (FAISS autotune's method).
     Floored at the calibration-scale 160, capped at the corpus size;
     falls back to the size-only fraction rule (pq_cand_budget) when
-    the corpus is too small to sample. Persisted to _ARTIFACT_DIR
-    like the codebooks (_tuned_scalar), keyed on corpus basename +
-    payload bytes + PQ shape — one n x 64 ADC pass at ingest time,
-    never re-paid by a new process."""
+    the corpus is too small to sample. Persisted as an artifact
+    (functions/memo.py) like the codebooks — one n x 64 ADC pass at
+    ingest time, never re-paid by a new process."""
     n = corpus_count(spark, sf_dir)
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (
-        f"pqbudget_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_b{_corpus_bytes(path)}_m{_PQ_M}_k{_PQ_K}"
-        if os.path.exists(path)
-        else None
-    )
-    return _tuned_scalar(
-        key, _PQ_BUDGET_CACHE, lambda: _pq_budget_compute(spark, sf_dir, n)
+    return artifact(
+        spark, "pqbudget", sf_dir, "embeddings", f"_m{_PQ_M}_k{_PQ_K}",
+        lambda: int(_pq_budget_compute(spark, sf_dir, n)), decode=int,
     )
 
 

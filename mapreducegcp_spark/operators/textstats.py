@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mapreducegcp_spark.functions.exact import o_pct, o_sorted_list
+from mapreducegcp_spark.functions.memo import memo, stamp
 from mapreducegcp_spark.functions.text import TOKEN_ORACLE_EXPR, tokens
 from mapreducegcp_spark.registry import register
 from mapreducegcp_spark.sources.catalog import load_table
@@ -1293,57 +1294,31 @@ doc_words AS MATERIALIZED (
 )"""
 
 
-_MERGES_CACHE: dict[str, dict[int, list[tuple[int, str, str, str]]]] = {}
-
-
 def _trained_merges(spark: SparkSession, sf_dir: str) -> dict:
     """Round-grouped BPE merge rules for ``sf_dir``, trained once per
-    corpus per process. A tokenizer is a TRAINED ARTIFACT — production
+    corpus per session. A tokenizer is a TRAINED ARTIFACT — production
     trains it at ingest and ships the merge table, exactly like the
     IVF/PQ quantizers (similarity.py) — so the three consumers
     (encode / fertility / tokenizer-dataset) must not each re-pay the
     8-driver-sync training loop (~2.7s of each query's ~3.2s at
-    sf0.1). Keyed on the documents table's path + payload bytes so a
-    regenerated corpus retrains (same freshness rule as the centroid
-    caches, including the directory-layout inode-size fix)."""
-    import os
+    sf0.1). Memoized on the documents table (functions/memo.py)."""
 
-    p = os.path.join(sf_dir, "documents.parquet")
-    if os.path.isdir(p):
-        n_bytes = sum(
-            os.path.getsize(os.path.join(p, f))
-            for f in sorted(os.listdir(p))
-            if os.path.isfile(os.path.join(p, f))
-        )
-    elif os.path.exists(p):
-        n_bytes = os.path.getsize(p)
-    else:
-        # synthetic corpus (tests monkeypatch load_table): no on-disk
-        # freshness key exists, so never cache — train directly
+    def train() -> dict[int, list[tuple[int, str, str, str]]]:
         rounds: dict[int, list[tuple[int, str, str, str]]] = {}
         for r in q_bpe_train_merges(spark, sf_dir).collect():
             rounds.setdefault(int(r["round"]), []).append(
                 (int(r["merge_rank"]), r["left_sym"], r["right_sym"], r["merged"])
             )
         return rounds
-    key = (
-        f"{os.path.normpath(sf_dir)}:{n_bytes}"
-        f":{_BPE_TRAIN_ROUNDS}x{_BPE_BATCH}c{_BPE_CAND}"
-    )
-    if key not in _MERGES_CACHE:
-        rounds: dict[int, list[tuple[int, str, str, str]]] = {}
-        for r in q_bpe_train_merges(spark, sf_dir).collect():
-            rounds.setdefault(int(r["round"]), []).append(
-                (int(r["merge_rank"]), r["left_sym"], r["right_sym"], r["merged"])
-            )
-        _MERGES_CACHE[key] = rounds
-    return _MERGES_CACHE[key]
+
+    kind = f"bpe_merges_{_BPE_TRAIN_ROUNDS}x{_BPE_BATCH}c{_BPE_CAND}"
+    return memo(spark, kind, sf_dir, stamp(sf_dir, ("documents",)), train)
 
 
 def _encoded_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, n_syms) over the DISTINCT-WORD vocabulary under the
     learned BPE merges: load the trained merge table (see
-    _trained_merges — cached per corpus), then chain one combined fold
+    _trained_merges — memoized per corpus), then chain one combined fold
     PER ROUND into a single higher-order projection — the shared
     Spark-side prefix of encode/fertility/tokenizer-dataset.
     Per-round (not per-merge) folds matter for fidelity: a batch

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreducegcp_spark.functions.exact import dsum, o_dec2, o_dsum
+from mapreducegcp_spark.functions.memo import memo, stamp
 from mapreducegcp_spark.registry import register
 from mapreducegcp_spark.sources.catalog import load_table
 
@@ -68,27 +69,15 @@ def _table_stream(spark: SparkSession, sf_dir: str, leaf: str, schema) -> DataFr
     )
 
 
-# Schema-probe memo: every streaming query pays a BATCH parquet read
-# just to learn the file schema the stream reader requires (~0.3-0.4s
-# of driver footer I/O + inference per call, twice for the two-source
-# stream-stream join). Schemas are file METADATA, not query results, so
-# memoizing them is the same discipline as the batch reader's own
-# per-session relation cache; the key carries applicationId + byte size
-# + mtime_ns (the pair-graph cache contract, operators/dedup.py:393) so
-# a rewritten file misses and an unstattable path bypasses the memo.
-_SCHEMA_MEMO: dict = {}
-
-
 def _probed_schema(spark: SparkSession, path: str):
-    try:
-        st = os.stat(path)
-    except OSError:
-        return spark.read.parquet(path).schema  # unstattable: no memo
-    key = (spark.sparkContext.applicationId, os.path.normpath(path),
-           st.st_size, st.st_mtime_ns)
-    if key not in _SCHEMA_MEMO:
-        _SCHEMA_MEMO[key] = spark.read.parquet(path).schema
-    return _SCHEMA_MEMO[key]
+    """File schema of the parquet table at ``path``, which the stream
+    reader requires. Probing it is a batch read (~0.3-0.4s of driver
+    footer I/O + inference per call, twice for the two-source
+    stream-stream join), so it is memoized per file (functions/memo.py)."""
+    return memo(
+        spark, "parquet_schema", path, stamp(path),
+        lambda: spark.read.parquet(path).schema,
+    )
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -150,9 +139,9 @@ class stream_partitions:
 LAST_PROGRESS: dict = {}
 
 
-def _ephemeral_checkpoint(name: str) -> str:
+def _ephemeral_checkpoint(spark: SparkSession, name: str) -> str:
     """Checkpoint dir for one finite-replay query, on tmpfs when the
-    host has one.
+    driver's host has one and the master is ``local*``.
 
     These queries start fresh on every call and sink to memory/scratch,
     so their checkpoint (offset WAL + commit log + state files) is
@@ -168,6 +157,11 @@ def _ephemeral_checkpoint(name: str) -> str:
     SPARK_GRAFT_STREAM_CKPT_ROOT to durable storage; that decision is
     an env conf, not a code shape.
 
+    /dev/shm is a per-host path, and on a cluster a checkpointLocation
+    must be storage the driver and every executor see, so any other
+    master falls back to the temp dir and production points the env
+    var at shared storage.
+
     The caller must remove the directory after stopping the query
     (explicit checkpointLocation opts out of Spark's temp-dir cleanup).
     """
@@ -175,7 +169,8 @@ def _ephemeral_checkpoint(name: str) -> str:
     if not root:
         import tempfile
 
-        root = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+        local = spark.sparkContext.master.startswith("local")
+        root = "/dev/shm" if local and os.path.isdir("/dev/shm") else tempfile.gettempdir()
     return os.path.join(root, f"mapreducegcp_ckpt_{name}")
 
 
@@ -192,7 +187,7 @@ def run_to_memory(df: DataFrame, mode: str) -> DataFrame:
     import shutil
 
     name = f"mem_{uuid4().hex[:12]}"
-    ckpt = _ephemeral_checkpoint(name)
+    ckpt = _ephemeral_checkpoint(df.sparkSession, name)
     try:
         with stream_partitions(df.sparkSession):
             q = (
@@ -557,7 +552,7 @@ def q_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     from uuid import uuid4 as _uuid4
 
-    ckpt = _ephemeral_checkpoint(f"feb_{_uuid4().hex[:12]}")
+    ckpt = _ephemeral_checkpoint(spark, f"feb_{_uuid4().hex[:12]}")
     try:
         with stream_partitions(spark):
             q = (

@@ -1,10 +1,10 @@
 """Every registered oracle must be valid DuckDB SQL over the real schema.
 
-The driver only value-checks ~50 queries per round, so an oracle typo
-in the back of the catalog could hide for rounds. This runs DuckDB
-EXPLAIN (bind + plan, no execution) for all 225 oracles against views
-over the smoke-scale parquet — pure DuckDB, no Spark session, ~seconds
-for the whole catalog."""
+This binds every registered oracle (288 today) with DuckDB EXPLAIN
+(bind + plan, no execution) against views over the smoke-scale
+parquet — pure DuckDB, no Spark session, ~seconds for the whole
+catalog — so an oracle typo fails here even for a query no value
+check runs."""
 
 from __future__ import annotations
 

@@ -310,29 +310,45 @@ def test_tuned_scalars_persist_like_the_other_ann_artifacts(spark, monkeypatch, 
     """The calibrated PQ budget and IVF nprobe must survive process
     death the way the anncal/centroid artifacts do (ADVICE r7: the
     in-process cache alone meant every new process re-paid the full
-    n x 64 ADC crossJoin): _tuned_scalar writes <key>.json on first
-    compute, and a cleared in-memory cache is served from DISK with
-    the compute function never called again."""
+    n x 64 ADC crossJoin): the first compute writes <key>.json, and a
+    cleared memo is served from DISK with the compute function never
+    called again."""
+    import mapreducegcp_spark.functions.memo as memo
     import mapreducegcp_spark.operators.similarity as sim
 
-    monkeypatch.setattr(sim, "_ARTIFACT_DIR", tmp_path)
+    art = tmp_path / "artifacts"
+    monkeypatch.setattr(memo, "ARTIFACT_DIR", art)
+    monkeypatch.setattr(memo, "_ENTRIES", {})
+    monkeypatch.setattr(sim, "corpus_count", lambda s, d: 2000)
     calls = []
 
-    def compute():
+    def compute(*args):
         calls.append(1)
         return 37
 
-    cache: dict = {}
-    assert sim._tuned_scalar("pqbudget_test_b1_m8_k32", cache, compute) == 37
-    assert (tmp_path / "pqbudget_test_b1_m8_k32.json").exists()
-    cache.clear()  # simulate a new process
-    assert sim._tuned_scalar("pqbudget_test_b1_m8_k32", cache, compute) == 37
-    assert len(calls) == 1, "second process must read the artifact, not recompute"
-    # key=None (unstattable corpus): compute every time, never persist
-    assert sim._tuned_scalar(None, cache, compute) == 37
-    assert sim._tuned_scalar(None, cache, compute) == 37
-    assert len(calls) == 3
-    assert list(tmp_path.iterdir()) == [tmp_path / "pqbudget_test_b1_m8_k32.json"]
+    monkeypatch.setattr(sim, "_pq_budget_compute", compute)
+    monkeypatch.setattr(sim, "_nprobe_compute", compute)
+    corpus = tmp_path / "test"
+    corpus.mkdir()
+    (corpus / "embeddings.parquet").write_bytes(b"x")
+    C = [[0.0] * 64 for _ in range(16)]
+
+    assert sim.pq_cand_calibrated(spark, str(corpus)) == 37
+    assert sim.ivf_nprobe_calibrated(spark, str(corpus), C) == 37
+    assert (art / "pqbudget_test_b1_m8_k32.json").exists()
+    assert (art / "nprobe_test_b1_k16.json").exists()
+    memo._ENTRIES.clear()  # simulate a new process
+    assert sim.pq_cand_calibrated(spark, str(corpus)) == 37
+    assert sim.ivf_nprobe_calibrated(spark, str(corpus), C) == 37
+    assert len(calls) == 2, "second process must read the artifacts, not recompute"
+    # unstattable corpus: compute every time, never persist
+    nowhere = str(tmp_path / "nowhere")
+    assert sim.pq_cand_calibrated(spark, nowhere) == 37
+    assert sim.pq_cand_calibrated(spark, nowhere) == 37
+    assert len(calls) == 4
+    assert sorted(p.name for p in art.iterdir()) == [
+        "nprobe_test_b1_k16.json", "pqbudget_test_b1_m8_k32.json"
+    ]
 
 
 def test_ann_calibration_discovers_prunability(spark):

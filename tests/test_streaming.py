@@ -604,25 +604,31 @@ def test_stream_checkpoint_recovery_exactly_once(spark, tmp_path):
 def test_schema_probe_memo_hits_and_invalidates(spark, tmp_path):
     """The per-session schema memo serves repeated probes of the same
     file without re-reading it, and a rewritten file (new mtime/size)
-    misses — a stale schema must never survive a corpus swap."""
+    misses and replaces the entry — a stale schema must never survive
+    a corpus swap."""
+    import mapreducegcp_spark.functions.memo as memo
     import mapreducegcp_spark.streaming.events as ev
 
     p = tmp_path / "t.parquet"
+
+    def entries():
+        return [v for k, v in memo._ENTRIES.items() if k[1] == str(p)]
+
     spark.range(3).selectExpr("id AS a").write.mode("overwrite").parquet(str(p))
-    ev._SCHEMA_MEMO.clear()
     s1 = ev._probed_schema(spark, str(p))
     assert [f.name for f in s1.fields] == ["a"]
-    assert len(ev._SCHEMA_MEMO) == 1
+    assert len(entries()) == 1
     # hit: same object back, no new entry
     assert ev._probed_schema(spark, str(p)) is s1
-    assert len(ev._SCHEMA_MEMO) == 1
-    # rewrite with a different schema -> new key, fresh probe
+    assert len(entries()) == 1
+    # rewrite with a different schema -> stamp changes, fresh probe
     spark.range(3).selectExpr("id AS a", "id AS b").write.mode(
         "overwrite"
     ).parquet(str(p))
     s2 = ev._probed_schema(spark, str(p))
     assert [f.name for f in s2.fields] == ["a", "b"]
-    assert len(ev._SCHEMA_MEMO) == 2
+    # one entry, holding the fresh schema
+    assert [v for _, v in entries()] == [s2]
 
 
 def test_ephemeral_checkpoint_root_and_cleanup(spark, monkeypatch, tmp_path):
@@ -638,10 +644,10 @@ def test_ephemeral_checkpoint_root_and_cleanup(spark, monkeypatch, tmp_path):
     import mapreducegcp_spark.streaming.events as ev
 
     monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT_ROOT", str(tmp_path))
-    assert ev._ephemeral_checkpoint("x").startswith(str(tmp_path))
+    assert ev._ephemeral_checkpoint(spark, "x").startswith(str(tmp_path))
     monkeypatch.delenv("SPARK_GRAFT_STREAM_CKPT_ROOT")
     if os.path.isdir("/dev/shm"):
-        assert ev._ephemeral_checkpoint("x").startswith("/dev/shm/")
+        assert ev._ephemeral_checkpoint(spark, "x").startswith("/dev/shm/")
 
     # run one real streaming query confined to tmp_path and verify the
     # checkpoint dir was created under the root and removed afterwards
@@ -650,6 +656,26 @@ def test_ephemeral_checkpoint_root_and_cleanup(spark, monkeypatch, tmp_path):
     assert out.count() > 0
     leftovers = [p for p in os.listdir(tmp_path) if p.startswith("mapreducegcp_ckpt_")]
     assert leftovers == [], leftovers
+
+
+def test_ephemeral_checkpoint_off_tmpfs_for_non_local_master(monkeypatch, tmp_path):
+    """/dev/shm is per host: on a non-local master the default root is
+    the temp dir, and the env override still wins."""
+    import os
+    import tempfile
+    from types import SimpleNamespace
+
+    import mapreducegcp_spark.streaming.events as ev
+
+    cluster = SimpleNamespace(
+        sparkContext=SimpleNamespace(master="spark://head:7077")
+    )
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_CKPT_ROOT", raising=False)
+    assert ev._ephemeral_checkpoint(cluster, "x") == os.path.join(
+        tempfile.gettempdir(), "mapreducegcp_ckpt_x"
+    )
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT_ROOT", str(tmp_path))
+    assert ev._ephemeral_checkpoint(cluster, "x").startswith(str(tmp_path))
 
 
 @pytest.mark.parametrize(

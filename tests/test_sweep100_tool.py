@@ -98,9 +98,9 @@ def test_report_without_receipts_does_not_claim_verification(tmp_path):
 
 
 def _latest_new_format_artifact() -> Path | None:
-    repo = Path(__file__).resolve().parent.parent
+    history = Path(__file__).resolve().parent.parent / "history"
     arts = sorted(
-        (p for p in repo.glob("SWEEP100_r*.json")
+        (p for p in history.glob("SWEEP100_r*.json")
          if re.fullmatch(r"SWEEP100_r(\d+)\.json", p.name)),
         key=lambda p: int(re.search(r"r(\d+)", p.name).group(1)),
     )

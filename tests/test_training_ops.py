@@ -506,6 +506,7 @@ def test_bpe_merges_train_once_per_corpus(spark, monkeypatch):
     run per corpus per process — re-training per query was ~2.7s of
     every BPE-family invocation at sf0.1. Freshness keys on the
     documents table's payload bytes, so a regenerated corpus retrains."""
+    import mapreducegcp_spark.functions.memo as memo
     import mapreducegcp_spark.operators.textstats as ts
 
     calls = {"n": 0}
@@ -516,7 +517,7 @@ def test_bpe_merges_train_once_per_corpus(spark, monkeypatch):
         return real(spark_, sf_dir_)
 
     monkeypatch.setattr(ts, "q_bpe_train_merges", counting)
-    monkeypatch.setattr(ts, "_MERGES_CACHE", {})
+    monkeypatch.setattr(memo, "_ENTRIES", {})
     d = "/root/testdata/sf0.001"
     a = ts._encoded_vocab(spark, d).count()
     b = ts._encoded_vocab(spark, d).count()

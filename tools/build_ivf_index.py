@@ -19,8 +19,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from mapreducegcp_spark.functions.memo import ARTIFACT_DIR
 from mapreducegcp_spark.operators.similarity import (
-    _ARTIFACT_DIR,
     corpus_count,
     ivf_centroids,
     ivf_params,
@@ -41,9 +41,9 @@ def main() -> int:
     for d in dirs:
         nlist, _ = ivf_params(corpus_count(spark, d))
         C = ivf_centroids(spark, d, k=nlist)
-        print(f"{d}: IVF {len(C)} centroids x {len(C[0])} dims -> {_ARTIFACT_DIR}")
+        print(f"{d}: IVF {len(C)} centroids x {len(C[0])} dims -> {ARTIFACT_DIR}")
         CB = pq_codebooks(spark, d)
-        print(f"{d}: PQ {len(CB)} codebooks x {len(CB[0])} centroids -> {_ARTIFACT_DIR}")
+        print(f"{d}: PQ {len(CB)} codebooks x {len(CB[0])} centroids -> {ARTIFACT_DIR}")
     return 0
 
 

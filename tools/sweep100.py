@@ -31,7 +31,7 @@ batch is retried query-by-query to isolate the hog.
     python tools/sweep100.py            # run / resume
     python tools/sweep100.py --receipts # record crossverify receipts
                                         # for the PRE_EXCLUDED register
-    python tools/sweep100.py --report [--emit SWEEP100_rN.json]
+    python tools/sweep100.py --report [--emit history/SWEEP100_rN.json]
 """
 
 from __future__ import annotations
@@ -77,7 +77,7 @@ PRE_EXCLUDED = {
     "similarity_nearest_neighbor": ("all-pairs exact-NN oracle: 4e12 cosines at 2M vectors", "10x"),
     "similarity_topk_bruteforce": ("labeled O(n^2) baseline; oracle shares the blowup", "10x"),
     # the round-8 sweep excluded these two at runtime (recorded in
-    # SWEEP100_r08.json); pre-registered here so future sweeps skip
+    # history/SWEEP100_r08.json); pre-registered here so future sweeps skip
     # the disk-exhausting solo attempts
     "dedup_incremental": ("exact shingle probe join saturates at blowup vocabulary (>77 GB spill measured); df_cap=1000 scale path 25.5s at 100x", "3x/10x"),
     "multimodal_phash_near_dup": ("all-pairs hamming oracle: 1.25e11 candidate pairs in DuckDB (>900s); engine multi-index completes standalone in 204s", "10x"),
@@ -384,7 +384,8 @@ def main() -> None:
         "--emit",
         default=None,
         help="with --report: also write the full SWEEP100_r{N}.json "
-        "artifact (summary + per-query rows) to this path",
+        "artifact (summary + per-query rows) to this path; committed "
+        "ones live under history/",
     )
     args = ap.parse_args()
 
