@@ -864,7 +864,7 @@ def q_pipeline_training_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kept feeds BOTH the quartile aggregate and the phase assignment;
     # without the checkpoint each consumer re-derives the whole
     # clean+manifest-join subtree (documents tokenized 4x —
-    # plans/r12/pipeline_training_dataset_before.txt). Lazy
+    # history/plans/r12/pipeline_training_dataset_before.txt). Lazy
     # localCheckpoint materializes the narrow (doc_id, n_tokens)
     # survivors once.
     kept = cleaned.join(

@@ -449,7 +449,7 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lo feeds BOTH the per-order aggregate and the late-lines probe;
     # without the checkpoint each consumer re-derives the scan + the
     # orderkey shuffle join (2 lineitem scans, 2 orders scans, 2 wide
-    # joins — plans/r12/tpch_q21_suppliers_kept_waiting_before.txt).
+    # joins — history/plans/r12/tpch_q21_suppliers_kept_waiting_before.txt).
     # Lazy localCheckpoint materializes the joined, projected (3-col)
     # table once; the checkpointed RDD keeps its orderkey hash
     # partitioning, so the groupBy and the join-back both reuse it

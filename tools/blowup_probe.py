@@ -1,6 +1,8 @@
 #!/usr/bin/env python
 """Disk-based scale blowup: materialize key-offset replicated PARQUET
-tables at 10x/100x sf0.1 volume and re-run the bench headline on them.
+tables at 3x/10x/100x sf0.1 volume and time the benchmark's 18 catalog
+queries (``perfbench/workloads.py::CATALOG_QUERIES``) on them at 1x and
+at the blown-up volume.
 
 `tools/scale_probe.py` replicates IN MEMORY (a union over the same
 cached scan), which proves plan-shape linearity but exercises neither
@@ -59,7 +61,9 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+sys.path.insert(0, str(REPO / "perfbench"))
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -245,24 +249,33 @@ def build(
         print(f"built {name}: {n} rows, {n_files} file(s), {time.time() - t0:.1f}s", flush=True)
 
 
-def run(spark: SparkSession, sf_dir: str, big_dir: str, factor: int) -> None:
-    # reuse bench's exact timing convention (_run: perf_counter around a
-    # noop-sink write) so these numbers stay comparable to the bench
-    # tables they sit next to in SCALE.md
-    from bench import HEADLINE, _run
+def _run(fn, spark: SparkSession, sf_dir: str) -> float:
+    """Seconds for one query's full plan, written to the noop sink."""
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
+def run(
+    spark: SparkSession, sf_dir: str, big_dir: str, factor: int, skew: bool = False
+) -> None:
+    """Time each query at 1x and at ``factor``x (best of 2, after one
+    warm-up per corpus): a markdown table, then one JSON line. The skew
+    tier times SKEW_QUERIES and adds the AQE skew-split receipt."""
     from mapreducegcp_spark.registry import all_queries
+    from workloads import CATALOG_QUERIES
 
     catalog = all_queries()
-    skip = EXCLUDE.get(factor, {})
+    names = SKEW_QUERIES if skew else CATALOG_QUERIES
+    skip = {} if skew else EXCLUDE.get(factor, {})
 
-    # warmup both directions
     for d in (sf_dir, big_dir):
         _run(catalog["wordcount"].fn, spark, d)
 
     rows = {}
-    print(f"| query | t_1x (s) | t_{factor}x (s) | ratio |")
+    print(f"| query | t_1x (s) | t_{factor}x{'-skew' if skew else ''} (s) | ratio |")
     print("|---|---|---|---|")
-    for name in HEADLINE:
+    for name in names:
         if name in skip:
             print(f"| `{name}` | — | — | excluded: {skip[name]} |")
             continue
@@ -271,7 +284,9 @@ def run(spark: SparkSession, sf_dir: str, big_dir: str, factor: int) -> None:
         tN = min(_run(fn, spark, big_dir) for _ in range(2))
         rows[name] = (round(t1, 2), round(tN, 2), round(tN / t1, 1))
         print(f"| `{name}` | {t1:.2f} | {tN:.2f} | {tN / t1:.1f} |", flush=True)
-    print(json.dumps({"factor": factor, "rows": rows}))
+    if skew:
+        skew_receipt(spark, big_dir)
+    print(json.dumps({"factor": factor, "skew": skew, "rows": rows}))
 
 
 # Skew-sensitive families for the --skew --run table: the hot join key
@@ -402,26 +417,6 @@ def skew_receipt(spark: SparkSession, big_dir: str) -> None:
         raise SystemExit("skew receipt: split and unsplit outputs diverged")
 
 
-def run_skew(spark: SparkSession, sf_dir: str, big_dir: str, factor: int) -> None:
-    from bench import _run
-    from mapreducegcp_spark.registry import all_queries
-
-    catalog = all_queries()
-    for d in (sf_dir, big_dir):
-        _run(catalog["wordcount"].fn, spark, d)
-    rows = {}
-    print(f"| query | t_1x (s) | t_{factor}x-skew (s) | ratio |")
-    print("|---|---|---|---|")
-    for name in SKEW_QUERIES:
-        fn = catalog[name].fn
-        t1 = min(_run(fn, spark, sf_dir) for _ in range(2))
-        tN = min(_run(fn, spark, big_dir) for _ in range(2))
-        rows[name] = (round(t1, 2), round(tN, 2), round(tN / t1, 1))
-        print(f"| `{name}` | {t1:.2f} | {tN:.2f} | {tN / t1:.1f} |", flush=True)
-    skew_receipt(spark, big_dir)
-    print(json.dumps({"factor": factor, "skew": True, "rows": rows}))
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
@@ -445,7 +440,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    # sf0.1 * 10 = sf1, * 100 = sf10 — the dir name feeds bench's _sf_of
+    # sf0.1 * 10 = sf1, * 100 = sf10 — each tier dir is named for its volume
     # sf0.1 * 3 = sf0.3 — the mid tier exists for the exact-pair-graph
     # family, whose cost is quadratic in the blowup factor on THIS
     # corpus by construction (see VERIFY notes / SCALE.md)
@@ -457,10 +452,7 @@ def main() -> None:
     if args.build:
         build(spark, args.sf_dir, out_dir, args.factor, skew=args.skew)
     if args.run:
-        if args.skew:
-            run_skew(spark, args.sf_dir, str(out_dir), args.factor)
-        else:
-            run(spark, args.sf_dir, str(out_dir), args.factor)
+        run(spark, args.sf_dir, str(out_dir), args.factor, skew=args.skew)
     if args.verify:
         import subprocess
 

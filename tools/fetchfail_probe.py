@@ -88,24 +88,12 @@ def row_hash_rows(rows) -> tuple[int, str]:
 
 def _stage_stats(spark) -> tuple[int, int]:
     """(total failed tasks, stage entries with attemptId >= 1) from the
-    AppStatusStore — the same reflection shape as retry/spill probes."""
-    store = spark.sparkContext._jsc.sc().statusStore()
-    jlist = spark._jvm.java.util.ArrayList()
-    try:
-        args = [jlist] + [
-            getattr(store, "stageList$default$%d" % i)() for i in range(2, 6)
-        ]
-        seq = store.stageList(*args)
-    except Exception as e:  # noqa: BLE001
-        raise RuntimeError(
-            "AppStatusStore.stageList reflection failed — the Spark "
-            "version changed its Scala default-arg arity; update the "
-            "range(2, 6) in this helper"
-        ) from e
+    AppStatusStore."""
+    from mapreducegcp_spark.profile import stages
+
     failed = 0
     resubmitted = 0
-    for i in range(seq.size()):
-        s = seq.apply(i)
+    for s in stages(spark):
         failed += s.numFailedTasks()
         if s.attemptId() >= 1:
             resubmitted += 1

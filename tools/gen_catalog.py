@@ -42,8 +42,8 @@ registry against r1/r2 artifacts should map them as follows:
 | `agg_approx_distinct` (never green) | `agg_approx_distinct_tol` (r1) | HLL output is engine-specific; re-registered with an explicit tolerance gate the oracle can state |
 
 The raw ANN top-k plans remain public as the unregistered
-`q_similarity_ann_{lsh,ivf,pq}` functions (tests and bench time them
-directly); the registered names carry the hash-checkable gates.
+`q_similarity_ann_{lsh,ivf,pq}` functions (tests call them directly);
+the registered names carry the hash-checkable gates.
 """
 
 

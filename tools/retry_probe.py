@@ -63,25 +63,11 @@ def main() -> int:
         .getOrCreate()
     )
     import mapreducegcp_spark.sources.catalog as catalog_mod
+    from mapreducegcp_spark.profile import stages
     from mapreducegcp_spark.registry import all_queries
 
     def failed_tasks() -> int:
-        store = spark.sparkContext._jsc.sc().statusStore()
-        jlist = spark._jvm.java.util.ArrayList()
-        try:
-            # Scala default args surface as stageList$default$N
-            # accessors; arity is 5 in Spark 4.x (see spill_probe).
-            args = [jlist] + [
-                getattr(store, "stageList$default$%d" % i)() for i in range(2, 6)
-            ]
-            seq = store.stageList(*args)
-        except Exception as e:  # noqa: BLE001
-            raise RuntimeError(
-                "AppStatusStore.stageList reflection failed — the Spark "
-                "version changed its Scala default-arg arity; update the "
-                "range(2, 6) in this helper"
-            ) from e
-        return sum(seq.apply(i).numFailedTasks() for i in range(seq.size()))
+        return sum(s.numFailedTasks() for s in stages(spark))
 
     base_load = catalog_mod.load_table
 

@@ -29,12 +29,13 @@ numbers the UI's stage page shows), diffed around each query.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+from retry_probe import row_hash  # noqa: E402  (tools/ is on the path)
 
 QUERIES = [
     "order_global_rownum",        # global sort: range exchange + per-partition sort
@@ -46,35 +47,11 @@ QUERIES = [
 SPILL_EXPECTED = {"order_global_rownum", "window_topn_per_customer"}
 
 
-def row_hash(df) -> tuple[int, str]:
-    rows = sorted(repr(tuple(r)) for r in df.collect())
-    h = hashlib.sha256()
-    for r in rows:
-        h.update(r.encode())
-    return len(rows), h.hexdigest()
-
-
 def stage_spills(spark) -> tuple[int, int]:
-    store = spark.sparkContext._jsc.sc().statusStore()
-    jlist = spark._jvm.java.util.ArrayList()
-    try:
-        # Scala default args surface as stageList$default$N accessors;
-        # arity is 5 in Spark 4.x. A py4j "method does not exist" here
-        # means a Spark upgrade changed the signature — fail with the
-        # fix location rather than a bare reflection error.
-        args = [jlist] + [
-            getattr(store, "stageList$default$%d" % i)() for i in range(2, 6)
-        ]
-        seq = store.stageList(*args)
-    except Exception as e:  # noqa: BLE001
-        raise RuntimeError(
-            "AppStatusStore.stageList reflection failed — the Spark "
-            "version changed its Scala default-arg arity; update the "
-            "range(2, 6) in this helper"
-        ) from e
+    from mapreducegcp_spark.profile import stages
+
     mem = disk = 0
-    for i in range(seq.size()):
-        s = seq.apply(i)
+    for s in stages(spark):
         mem += s.memoryBytesSpilled()
         disk += s.diskBytesSpilled()
     return mem, disk
