@@ -249,7 +249,8 @@ def q_mapred_generic_python_app(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference: ``functionMap`` dispatch of arbitrary mapper/reducer
     pairs (Worker/Worker.py:68-78). A custom letter-histogram app runs
     through the Arrow-batched generic path (``mapInPandas`` map stage,
-    ``applyInPandas`` per-key reduce — plans/run_mapred.py:197-223),
+    then a key-sorted ``mapInPandas`` stream, one ``reducer`` call per
+    key — ``MapReduceEngine._generic_mapred``),
     with JSON-encoded values crossing the Exchange exactly as the
     reference's KV store carried them.
     """

@@ -19,9 +19,10 @@ re-expressed Spark-first:
   built-in applications (WordCount, InvertedIndex) dispatch to fully
   declarative DataFrame plans — no Python in the hot path.
 - user-supplied map/reduce Python runs through Arrow-batched
-  ``mapInPandas`` (map stage: ``f(text, filename) -> [(k, v)]``) and
-  ``applyInPandas`` (reduce stage: ``f(key, values) -> value``), never
-  row-at-a-time serialization. Values cross stages JSON-encoded so an
+  ``mapInPandas`` stages, never row-at-a-time serialization: the map
+  stage calls ``f(text, filename) -> [(k, v)]``, and the reduce stage
+  is a key-sorted ``mapInPandas`` stream, one ``f(key, values) -> value``
+  call per key. Values cross stages JSON-encoded so an
   arbitrary JSON-able value type keeps a stable Spark schema — the
   same contract the reference's KV store imposed (everything
   ``json.dumps``-able, SURVEY.md §1.2).
@@ -135,10 +136,13 @@ class MapReduceEngine:
         ``reducer(key, values) -> value`` — the Dean & Ghemawat
         signatures (per-key reduce, unlike the reference's
         whole-partition dict at Worker/Worker.py:94-97; same results).
-        Values must be JSON-serializable. Standard Spark shipping rules
-        apply: the functions must be self-contained (or reference only
-        modules importable on executors) — cloudpickle serializes the
-        function body by value but module-level globals by reference.
+        ``reducer`` is called exactly once per key; the order of
+        ``values`` is unspecified; one key's values are held in memory
+        at once. Values must be JSON-serializable. Standard Spark
+        shipping rules apply: the functions must be self-contained (or
+        reference only modules importable on executors) — cloudpickle
+        serializes the function body by value but module-level globals
+        by reference.
         """
         self._apps[name] = _Application(mapper, reducer)
 
@@ -215,11 +219,18 @@ class MapReduceEngine:
         )
 
     def _generic_mapred(self, docs: DataFrame, app: _Application) -> DataFrame:
-        """User-Python map/reduce as two Arrow-batched stages.
+        """User-Python map/reduce as two Arrow-batched ``mapInPandas``
+        stages around one shuffle.
 
-        The shuffle between them is Catalyst's Exchange — the stage the
-        reference funneled through one Python process
-        (Master/Master.py:130-163) runs distributed here.
+        The shuffle is Catalyst's Exchange (``repartition("key")``) — the
+        stage the reference funneled through one Python process
+        (Master/Master.py:130-163) runs distributed here. Each reduce
+        partition is then sorted by key and read as one stream, so the
+        per-key cost is a Python call, not a pandas frame and an Arrow
+        round trip as with ``groupBy().applyInPandas``. Only the current
+        key's values are held, in the Python worker; collecting them
+        into one JVM row (``collect_list``) would hit the 2 GB row limit
+        on a hot key.
         """
         mapper, reducer = app.mapper, app.reducer
 
@@ -233,14 +244,38 @@ class MapReduceEngine:
                         vals.append(json.dumps(v))
                 yield pd.DataFrame({"key": keys, "value": vals})
 
-        def reduce_stage(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            values = [json.loads(v) for v in pdf["value"]]
-            return pd.DataFrame(
-                {"key": [key[0]], "value": [json.dumps(reducer(key[0], values))]}
-            )
+        def reduce_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            # Hadoop's sorted-merge reduce: each partition arrives sorted
+            # by key, so a run of equal keys is one reducer call. The
+            # open run carries across batch boundaries and is flushed
+            # after the last batch. ``no_key`` is a sentinel because ""
+            # is a legal key; it is made here, not at module level, so
+            # the closure ships to workers without importing this module.
+            no_key = object()
+            open_key, open_vals = no_key, []
+            for pdf in batches:
+                keys: list[str] = []
+                vals: list[str] = []
+                for k, v in zip(pdf["key"], pdf["value"]):
+                    if k != open_key:
+                        if open_key is not no_key:
+                            keys.append(open_key)
+                            vals.append(json.dumps(reducer(open_key, open_vals)))
+                        open_key, open_vals = k, []
+                    open_vals.append(json.loads(v))
+                if keys:
+                    yield pd.DataFrame({"key": keys, "value": vals})
+            if open_key is not no_key:
+                yield pd.DataFrame(
+                    {"key": [open_key], "value": [json.dumps(reducer(open_key, open_vals))]}
+                )
 
         pairs = docs.select("filename", "text").mapInPandas(map_stage, _PAIR_SCHEMA)
-        return pairs.groupBy("key").applyInPandas(reduce_stage, _PAIR_SCHEMA)
+        return (
+            pairs.repartition("key")
+            .sortWithinPartitions("key")
+            .mapInPandas(reduce_stage, _PAIR_SCHEMA)
+        )
 
 
 def json_sink(df: DataFrame, path: str, n_files: int = 1) -> None:

@@ -102,6 +102,97 @@ def test_output_path_and_json_sink(engine, corpus_dir, tmp_path, spark):
     assert {r["word"]: r["cnt"] for r in rows}["words"] == 3
 
 
+# ------------------------------------------- the user-Python reduce stream
+
+
+def _register_values_app(engine):
+    """Register "Values": "key=json" tokens, a bare token is itself the
+    key with value 1; the reducer returns the count and the sorted
+    values. Defined locally: workers cannot import this test module."""
+
+    def mapper(text, filename):
+        import json as _json
+
+        pairs = []
+        for tok in text.split():
+            key, sep, val = tok.partition("=")
+            pairs.append((key, _json.loads(val) if sep else 1))
+        return pairs
+
+    def reducer(key, values):
+        import json as _json
+
+        return {"n": len(values), "values": sorted(values, key=_json.dumps)}
+
+    engine.register_application("Values", mapper, reducer)
+    return engine._apps["Values"]
+
+
+@pytest.fixture()
+def tiny_batches(spark):
+    """Two-row Arrow batches over two shuffle partitions, so every key
+    run with more than two values crosses a batch boundary."""
+    keys = ("spark.sql.execution.arrow.maxRecordsPerBatch", "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set(keys[0], "2")
+    spark.conf.set(keys[1], "2")
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def _reduce_rows(spark, engine, text):
+    from mapreducegcp_spark.sources.catalog import docs_from_string
+
+    df = engine._generic_mapred(docs_from_string(spark, text), _register_values_app(engine))
+    return [(r["key"], json.loads(r["value"])) for r in df.collect()], df
+
+
+def test_reduce_hot_key_across_batches_is_one_call(spark, engine, tiny_batches):
+    text = " ".join(["hot"] * 25 + ["a", "b"] + ["hot"] * 25 + ["a"])
+    rows, _ = _reduce_rows(spark, engine, text)
+    keys = [k for k, _ in rows]
+    assert sorted(keys) == ["a", "b", "hot"], keys  # each key exactly once
+    got = dict(rows)
+    assert got["hot"] == {"n": 50, "values": [1] * 50}
+    assert got["a"]["n"] == 2 and got["b"]["n"] == 1
+
+
+def test_reduce_every_key_once_with_odd_keys_and_values(spark, engine, tiny_batches):
+    words = [f"w{i % 7}" for i in range(40)]
+    text = " ".join(words + ["=null", "=null", '={"x":[1,null]}', "n=null", "n=[[]]"])
+    rows, _ = _reduce_rows(spark, engine, text)
+    keys = [k for k, _ in rows]
+    assert len(keys) == len(set(keys)) == 9, keys
+    got = dict(rows)
+    assert all(got[f"w{i}"]["n"] == Counter(words)[f"w{i}"] for i in range(7))
+    # "" is a legal key, distinct from "no key yet"
+    assert got[""] == {"n": 3, "values": sorted([None, None, {"x": [1, None]}], key=json.dumps)}
+    assert got["n"] == {"n": 2, "values": sorted([None, [[]]], key=json.dumps)}
+
+
+def test_reduce_plan_is_one_exchange_and_a_sorted_stream(spark, engine, tiny_batches):
+    _, df = _reduce_rows(spark, engine, "a b a")
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.finalPhysicalPlan()
+    nodes = Counter(
+        re.sub(r"^[\s:+|-]*(\*\(\d+\) )?", "", line).split(" ")[0]
+        for line in plan.toString().splitlines()
+    )
+    assert nodes["FlatMapGroupsInPandas"] == 0, plan.toString()
+    assert nodes["Exchange"] == 1, plan.toString()
+    assert nodes["MapInPandas"] == 2, plan.toString()
+
+
+def test_empty_input_returns_empty_object(engine):
+    _register_values_app(engine)
+    uid = engine.init_cluster(1, 2)
+    assert engine.run_mapred(uid, "", "Values", "Values") == "{}"
+
+
 # ---------------------------------------------------------- property test
 
 from collections import Counter

@@ -70,6 +70,7 @@ from pyspark.sql import functions as F
 
 from mapreducegcp_spark.session import get_spark
 from mapreducegcp_spark.sources.catalog import TABLES, load_table
+from retry_probe import row_hash_rows  # tools/ is on the path
 
 OFFSET = 10_000_000_000
 
@@ -331,8 +332,6 @@ def skew_receipt(spark: SparkSession, big_dir: str) -> None:
     same way production tunes them to task-size targets. Evidence:
     ``skew=true`` markers in the executed adaptive plan + identical
     sha256 with the skew-split disabled."""
-    import hashlib
-
     conf = spark.conf
     saved = {
         k: conf.get(k)
@@ -380,13 +379,10 @@ def skew_receipt(spark: SparkSession, big_dir: str) -> None:
         conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", str(split_on).lower())
         df = hot_join()
         t0 = time.time()
-        rows = sorted(repr(tuple(r)) for r in df.collect())
+        rows = df.collect()
         sec = time.time() - t0
-        h = hashlib.sha256()
-        for r in rows:
-            h.update(r.encode())
         plan = df._jdf.queryExecution().executedPlan().toString()
-        return len(rows), h.hexdigest(), sec, plan
+        return (*row_hash_rows(rows), sec, plan)
 
     try:
         n_on, h_on, t_on, plan_on = run_once(True)

@@ -58,7 +58,6 @@ union-find query.
 from __future__ import annotations
 
 import glob
-import hashlib
 import json
 import os
 import re
@@ -69,6 +68,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from retry_probe import row_hash_rows  # noqa: E402  (tools/ is on the path)
+
 QUERIES = [
     "wordcount",
     "tpch_q10_returned_items",
@@ -76,14 +77,6 @@ QUERIES = [
     "join_nation_revenue",
     "bpe_fertility_stats",
 ]
-
-
-def row_hash_rows(rows) -> tuple[int, str]:
-    srows = sorted(repr(tuple(r)) for r in rows)
-    h = hashlib.sha256()
-    for r in srows:
-        h.update(r.encode())
-    return len(srows), h.hexdigest()
 
 
 def _stage_stats(spark) -> tuple[int, int]:

@@ -42,12 +42,18 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 QUERIES = ["wordcount", "window_topn_per_customer", "dedup_embedding_clusters"]
 
 
-def row_hash(df) -> tuple[int, str]:
-    rows = sorted(repr(tuple(r)) for r in df.collect())
+def row_hash_rows(rows) -> tuple[int, str]:
+    """(row count, sha256 over the rows' sorted ``repr``s): an
+    order-free value hash of collected rows."""
+    srows = sorted(repr(tuple(r)) for r in rows)
     h = hashlib.sha256()
-    for r in rows:
+    for r in srows:
         h.update(r.encode())
-    return len(rows), h.hexdigest()
+    return len(srows), h.hexdigest()
+
+
+def row_hash(df) -> tuple[int, str]:
+    return row_hash_rows(df.collect())
 
 
 def main() -> int:
