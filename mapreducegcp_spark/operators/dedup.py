@@ -334,10 +334,12 @@ def jaccard_pair_graph(
     consumer. ``shingle_rows`` lets the first builder in a query that
     also needs raw shingles (dedup_lsh_eval) feed one shared scan.
 
-    Six catalog queries (three cluster engines, the keep manifest, the
-    LSH eval, the leakage audit/split) consume this identical edge set;
-    without the memo (functions/memo.py) each re-ran the same ~2-4 s
-    shingle self-join."""
+    The cluster query, the keep manifest (and the leakage split, audit
+    and training dataset built on it) and the three pair-set evals
+    (lsh, simhash, semantic-vs-lexical) consume this identical edge
+    set; without the memo (functions/memo.py) each re-ran the same
+    ~2-4 s shingle self-join. Every cluster consumer resolves it with
+    the one components engine, local_uf_components."""
 
     def build() -> DataFrame:
         # safe_checkpoint: near-dup pair streams concentrate a hot
@@ -792,91 +794,6 @@ GROUP BY src
 """
 
 
-
-def min_label_components(pairs: DataFrame, a: str, b: str) -> DataFrame:
-    """Connected components by iterative min-label propagation — the
-    shared engine behind duplicate-cluster resolution (see
-    dedup_connected_components for the full scale argument). Input:
-    undirected pair list (one row per edge, columns ``a``/``b``);
-    output: (node, cluster_id = component min). Nodes with no edge are
-    absent, matching the recursive-CTE oracles."""
-    half = pairs.select(F.col(a), F.col(b)).cache()
-    # Size the loop's partitioning to the GRAPH, not the cluster: each
-    # round schedules several jobs over these partitions, and a dup
-    # graph is orders of magnitude smaller than the corpus it came
-    # from (50 edges at sf0.01). One row per ~100k edges, capped at
-    # the session's parallelism — tiny graphs iterate at single-task
-    # latency, billion-edge graphs keep full width.
-    n_edges = 2 * half.count()
-    spark = pairs.sparkSession
-    n_part = int(max(2, min(spark.sparkContext.defaultParallelism, 1 + n_edges // 100_000)))
-    edges = (
-        half.union(half.select(F.col(b), F.col(a)))
-        .toDF("a", "b")
-        .repartition(n_part, "b")
-        .cache()
-    )
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("cluster_id", F.col("node"))
-        .repartition(n_part, "node")
-        .localCheckpoint()
-    )
-    from pyspark.sql import Observation
-
-    try:
-        for _ in range(50):  # hard bound; converges in <= graph diameter
-            neigh = (
-                edges.join(labels, edges["b"] == labels["node"])
-                .groupBy("a")
-                .agg(F.min("cluster_id").alias("nmin"))
-            )
-            # the changed-count rides the checkpoint materialization via
-            # observe() — no separate convergence job per round (and no
-            # join against the old labels: the previous label is carried
-            # through as a column)
-            obs = Observation()
-            new = (
-                labels.join(neigh, labels["node"] == neigh["a"], "left")
-                .select(
-                    labels["node"],
-                    F.least(
-                        labels["cluster_id"],
-                        F.coalesce(neigh["nmin"], labels["cluster_id"]),
-                    ).alias("cluster_id"),
-                    labels["cluster_id"].alias("prev"),
-                )
-                .observe(
-                    obs,
-                    F.count(F.when(F.col("cluster_id") != F.col("prev"), 1)).alias(
-                        "changed"
-                    ),
-                )
-                .localCheckpoint()
-            )
-            changed = obs.get["changed"]
-            labels = new.select("node", "cluster_id")
-            if changed == 0:
-                break
-        else:
-            # fail LOUDLY: labels short of the fixed point are silently
-            # wrong cluster ids, and a >50-diameter graph means the caller
-            # picked the wrong engine for its shape
-            raise RuntimeError(
-                "min_label_components did not converge in 50 rounds "
-                "(graph diameter > 50); use two_phase_components, whose "
-                "round count is logarithmic in component size"
-            )
-    finally:
-        # labels is checkpointed, so releasing the inputs here is safe
-        # on every exit path — including the non-convergence raise,
-        # which previously leaked both caches in a long-lived session
-        edges.unpersist()
-        half.unpersist()
-    return labels
-
-
 @register("dedup_connected_components", oracle=_CLUSTERS_ORACLE, tags=("llm-pipeline",))
 def q_dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster resolution: connected components over the exact
@@ -884,166 +801,16 @@ def q_dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the component — the step that turns pairwise similarity into
     keep-one-per-group dedup decisions.
 
-    Iterative min-label propagation as a driver-controlled loop of
-    joins: each round every node adopts the minimum label among itself
-    and its neighbors; converges in <= diameter rounds (duplicate
-    clusters are tiny cliques, 2-3 rounds in practice). The only
-    driver-side value per round is the converged? count — data never
-    leaves executors; localCheckpoint truncates lineage so plans don't
-    grow exponentially. At 1e9+ edges the same loop runs with the
-    alternating large-star/small-star optimization (O(log n) rounds);
-    the DuckDB oracle is a recursive-CTE transitive closure.
+    Served by local_uf_components, the package's one components
+    engine: a fixed job count per contraction level instead of one
+    scheduled round per graph-diameter step, falling back to
+    two_phase_components when the boundary graph stops shrinking.
+    The DuckDB oracle is a recursive-CTE transitive closure.
     """
     pairs = jaccard_pair_graph(spark, sf_dir)
-    return min_label_components(pairs, "doc_a", "doc_b").select(
+    return local_uf_components(pairs, "doc_a", "doc_b").select(
         F.col("node").alias("doc_id"), "cluster_id"
     )
-
-
-def recursive_sql_components(spark: SparkSession, pairs: DataFrame) -> DataFrame:
-    """Connected components with the transitive closure INSIDE the
-    engine (Spark 4 WITH RECURSIVE) — the execution-path alternative
-    to the three driver-controlled loops. Output matches them exactly:
-    (doc_id, cluster_id = component min), nodes with >= 1 edge.
-
-    Three-stage composition, each stage covering the previous one's
-    failure mode:
-
-    1. TWO STATIC CONTRACTION PRE-ROUNDS (plain SQL, no recursion):
-       each node adopts min(self, neighbors) and edges re-map through
-       that label; vanished (intra-label) edges drop. One round
-       collapses any clique to a star (the component min is adjacent
-       to every member), which removes the recursive walk's
-       path-enumeration explosion — on a k-clique, depth-d
-       reachability materializes k*(k-1)^d paths (2,244-copy skew
-       cluster: 2.5e13 rows at d=4), but a contracted clique has no
-       edges left to walk. Chain-shaped graphs shrink their diameter
-       each round instead.
-    2. DEPTH-4 RECURSIVE REACHABILITY over the contracted graph
-       (Spark 4 recursion is UNION ALL-only — no fixpoint dedup — so
-       the walk must be depth-bounded; 2 contraction rounds + depth 4
-       cover every corpus tier this engine has seen, including the
-       uniform-100x blowup graph whose diameter-5 component the
-       round-9 engine-vs-engine cross-check caught the bare depth-4
-       walk silently mislabeling). Final labels compose the two
-       contraction maps with the recursive closure.
-    3. A FIXPOINT GUARD in the same plan: every input edge must join
-       two equal final labels; a residual difference means the graph
-       out-ran the depth budget and the query FAILS LOUDLY
-       (raise_error through a 1-row broadcast) instead of returning
-       plausible-but-wrong clusters — the same fail-loud contract as
-       min_label_components' 50-round bound. Deeper graphs are the
-       iterative engines' domain, not this one's.
-    """
-    e = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    maps = []
-    for _ in range(2):
-        und = e.union(e.select(F.col("b"), F.col("a"))).toDF("u", "v")
-        m = (
-            und.groupBy("u")
-            .agg(F.min("v").alias("nmin"))
-            .select("u", F.least("u", "nmin").alias("m"))
-            .localCheckpoint(eager=False)
-        )
-        maps.append(m)
-        ma = m.select(F.col("u").alias("a"), F.col("m").alias("la"))
-        mb = m.select(F.col("u").alias("b"), F.col("m").alias("lb"))
-        e = (
-            e.join(ma, "a")
-            .join(mb, "b")
-            .where(F.col("la") != F.col("lb"))
-            .select(
-                F.least("la", "lb").alias("a"), F.greatest("la", "lb").alias("b")
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-    e.createOrReplaceTempView("dup_pairs_contracted")
-    rec = spark.sql(
-        """
-        WITH RECURSIVE
-        e AS (SELECT a, b FROM dup_pairs_contracted
-              UNION ALL
-              SELECT b, a FROM dup_pairs_contracted),
-        nodes AS (SELECT DISTINCT a AS n FROM e),
-        reach(src, dst, depth) AS (
-          SELECT n, n, 0 FROM nodes
-          UNION ALL
-          SELECT r.src, e.b, r.depth + 1
-          FROM reach r JOIN e ON r.dst = e.a
-          WHERE r.depth < 4
-        )
-        SELECT src AS l2, min(dst) AS l3
-        FROM reach
-        GROUP BY src
-        """
-    )
-    # Compose: node -> round-1 label -> round-2 label -> closure label.
-    # A label absent from the next layer means its edges vanished
-    # there, i.e. it already IS its component's min (coalesce holds it).
-    lab = maps[0].select(F.col("u").alias("doc_id"), F.col("m").alias("l1"))
-    m2 = maps[1].select(F.col("u").alias("l1"), F.col("m").alias("l2"))
-    lab = lab.join(m2, "l1", "left").select(
-        "doc_id", F.coalesce("l2", "l1").alias("l2")
-    )
-    lab = lab.join(rec, "l2", "left").select(
-        "doc_id", F.coalesce("l3", "l2").alias("cluster_id")
-    )
-    lab = lab.localCheckpoint(eager=False)
-    la = lab.select(F.col("doc_id").alias("a"), F.col("cluster_id").alias("ca"))
-    lb = lab.select(F.col("doc_id").alias("b"), F.col("cluster_id").alias("cb"))
-    guard = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .join(la, "a")
-        .join(lb, "b")
-        .where(F.col("ca") != F.col("cb"))
-        .agg(F.count("*").alias("n_bad"))  # exactly one row
-        .select(
-            F.assert_true(
-                F.col("n_bad") == 0,
-                F.lit(
-                    "recursive_sql_components: graph diameter exceeds the "
-                    "contraction+depth budget; use min_label_components / "
-                    "two_phase_components / local_uf_components"
-                ),
-            ).alias("converged")
-        )
-    )
-    # The guard column must survive optimization: a bare drop() lets
-    # Catalyst prune the assert_true projection without evaluating it
-    # (observed — the deep-graph test returned wrong labels silently).
-    # Filtering ON the column makes its value load-bearing:
-    # assert_true yields NULL on success, raises otherwise.
-    return (
-        lab.crossJoin(F.broadcast(guard))
-        .where(F.col("converged").isNull())
-        .drop("converged")
-    )
-
-
-@register("dedup_clusters_recursive_sql", oracle=_CLUSTERS_ORACLE, tags=("llm-pipeline",))
-def q_dedup_clusters_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-cluster resolution via WITH RECURSIVE (Spark 4 native
-    recursion) — same result as dedup_connected_components, same DuckDB
-    oracle, different execution path: the transitive closure runs
-    INSIDE the engine instead of as a driver-controlled join loop (see
-    recursive_sql_components for the contraction + depth + fixpoint-
-    guard composition, hardened by the round-9 100x cross-check).
-
-    When to choose which at 100 TB: the recursive CTE materializes a
-    reachability relation, so it is right for graphs whose contracted
-    components are small/shallow (dup clusters); unboundedly deep
-    graphs are the iterative engines' domain — and the guard makes
-    that boundary a loud error, never a wrong answer."""
-    # The pair graph must be MATERIALIZED before use: Spark's
-    # recursive CTE re-evaluates the anchor's dependencies every
-    # iteration, and the graph here is the full shingle self-join —
-    # unmaterialized, each recursion round re-ran an ~2s plan
-    # (14.4s for this query at sf0.01). The shared session graph is a
-    # lazy checkpoint: the first consumer materializes it, later
-    # rounds (and the five sibling consumers) re-read tiny in-memory
-    # pair rows (measured ~5x faster).
-    return recursive_sql_components(spark, jaccard_pair_graph(spark, sf_dir))
 
 
 # ------------------------------------- fuzzy string join (FastSS, dist<=1)
@@ -1290,9 +1057,9 @@ def two_phase_components(
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — the O(log n)-round engine min_label_components'
-    docstring points to for billion-edge / high-diameter graphs, where
-    diameter-round label propagation is the latency bottleneck.
+    Beyond") — local_uf_components' fallback for graphs whose boundary
+    stops shrinking (id-locality-free chains): its round count is
+    O(log n) in component size, whatever the graph's diameter.
 
     Each round rewrites the edge set toward stars centered at
     component minima:
@@ -1306,7 +1073,7 @@ def two_phase_components(
     list — edge-proportional shuffles, one label-free edge set as the
     only state, localCheckpoint truncating lineage per round. The
     fixed point is one star per component; labels read directly off
-    the final edges. Same contract as min_label_components: nodes
+    the final edges. Same contract as local_uf_components: nodes
     without edges are absent; self-pairs ignored; output (node,
     cluster_id = component min).
 
@@ -1336,8 +1103,8 @@ def two_phase_components(
     # not each re-run the (expensive) pair generator upstream — the
     # eager localCheckpoint materializes it exactly once and both the
     # sizing count and the loop read the checkpointed edges (one
-    # jaccard materialization instead of two: ~1.1s off
-    # dedup_clusters_twophase at sf0.1, warm best-of-2).
+    # jaccard materialization instead of two: ~1.1s off a two-phase
+    # run over the sf0.1 jaccard graph, warm best-of-2).
     C0 = canon.localCheckpoint()
     if block_probe is not None:
         block_probe("C0", C0)
@@ -1404,9 +1171,9 @@ def two_phase_components(
             break
         sig = new_sig
     else:
-        # mirror min_label_components: a capped-out run means the edge
-        # set never reached its fixed point, and labels read off it
-        # would be silently wrong cluster ids — fail loudly instead
+        # a capped-out run means the edge set never reached its fixed
+        # point, and labels read off it would be silently wrong
+        # cluster ids — fail loudly instead
         raise RuntimeError(
             "two_phase_components did not converge in 50 alternations; "
             "O(log n) rounds should never need this many — the input "
@@ -1415,27 +1182,6 @@ def two_phase_components(
     roots = C.select(F.col("lo").alias("node"), F.col("lo").alias("cluster_id"))
     members = C.select(F.col("hi").alias("node"), F.col("lo").alias("cluster_id"))
     return roots.union(members).distinct()
-
-
-@register("dedup_clusters_twophase", oracle=_CLUSTERS_ORACLE, tags=("llm-pipeline",))
-def q_dedup_clusters_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-cluster resolution via the two-phase large-star /
-    small-star algorithm — third execution path for the same result as
-    dedup_connected_components (diameter-round label loop) and
-    dedup_clusters_recursive_sql (in-engine recursion), same DuckDB
-    recursive-CTE oracle.
-
-    When to choose which at 100 TB: label propagation pays rounds =
-    graph DIAMETER (fine for clique-like dup clusters); the recursive
-    CTE materializes full reachability (fine for tiny components);
-    two-phase pays O(log n) rounds regardless of diameter with
-    edge-proportional rounds — the right engine when near-dup chains
-    get LONG (template pages, boilerplate gradients) and diameter is
-    unbounded."""
-    pairs = jaccard_pair_graph(spark, sf_dir)
-    return two_phase_components(pairs, "doc_a", "doc_b").select(
-        F.col("node").alias("doc_id"), "cluster_id"
-    )
 
 
 _UF_EDGES_PER_PART = 100_000  # per-partition union-find work target
@@ -1449,16 +1195,16 @@ def local_uf_components(
     max_levels: int = 8,
 ) -> DataFrame:
     """Connected components by partition-local union-find + boundary
-    contraction — the LATENCY-optimal fourth engine next to
-    min_label_components (diameter rounds), the recursive CTE
-    (reachability materialization) and two_phase_components (O(log n)
-    alternations). Those three pay a scheduled round-trip per
-    iteration; on a 17-diameter embedding near-dup chain graph that is
-    17 jobs x fixed stage latency, the measured dedup_embedding_clusters
-    breadth tail (~4.8s at sf0.1 for a 920-edge graph). This engine
-    pays a FIXED number of jobs per contraction LEVEL, and levels are
-    logarithmic in graph size with base edges_per_part (~100k), so any
-    graph under ~10^10 edges resolves in 2-3 levels:
+    contraction — the package's one components engine, behind every
+    duplicate-cluster consumer (dedup_connected_components,
+    dedup_keep_manifest and its splits, dedup_embedding_clusters).
+    Iterative engines pay a scheduled round-trip per iteration; on a
+    17-diameter embedding near-dup chain graph diameter-round label
+    propagation paid 17 jobs x fixed stage latency (~4.8s at sf0.1 for
+    a 920-edge graph). This engine pays a FIXED number of jobs per
+    contraction LEVEL (4 jobs in all on every catalog graph), and
+    levels are logarithmic in graph size with base edges_per_part
+    (~100k), so any graph under ~10^10 edges resolves in 2-3 levels:
 
     - partition the canonical (lo, hi) edge list by hash(lo) into
       ceil(n_edges / edges_per_part) partitions;
@@ -1476,14 +1222,19 @@ def local_uf_components(
       which cannot produce a boundary, so termination is structural;
       compose mappings back up with one left join per level.
 
-    Same contract as the sibling engines: nodes without edges absent,
-    self-pairs ignored, output (node, cluster_id = component min).
+    Contract: nodes without edges absent, self-pairs ignored, output
+    (node, cluster_id = component min).
     Union-by-min keeps every root the minimum of its piece, so the
     composed root is the GLOBAL component minimum (min over piece
     minima). The per-partition Python loop is the deliberate trade:
     an O(E alpha) sequential pass over ~100k-edge slices beats 17
     scheduled shuffle rounds by an order of magnitude in wall clock,
-    and the slice size — not the graph size — bounds task memory."""
+    and the slice size — not the graph size — bounds task memory.
+    Its known cost is the clique-heavy graph: the Python pass walks
+    every clique edge, where a shuffle engine drops intra-label edges
+    in the JVM (2.4M-edge synthetic clique graph, local[4]: 11-15 s
+    against 7-10 s for the retired label-propagation and recursive
+    engines; SCALE.md records the 32-core 100x-skew receipt)."""
     spark = pairs.sparkSession
     dt = {f.name: f.dataType.simpleString() for f in pairs.schema.fields}[a]
     schema = f"node {dt}, root {dt}"
@@ -1617,26 +1368,6 @@ def local_uf_components(
             .distinct()
         )
     return res.select("node", F.col("root").alias("cluster_id"))
-
-
-@register("dedup_clusters_localuf", oracle=_CLUSTERS_ORACLE, tags=("llm-pipeline",))
-def q_dedup_clusters_localuf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-cluster resolution via partition-local union-find +
-    boundary contraction (local_uf_components) — fourth execution path
-    for the same result as dedup_connected_components,
-    dedup_clusters_recursive_sql and dedup_clusters_twophase, same
-    DuckDB recursive-CTE oracle.
-
-    When to choose which at 100 TB: this one whenever end-to-end
-    LATENCY matters — it pays jobs per contraction LEVEL (2-3 total)
-    instead of per diameter round or per large/small-star alternation,
-    at the cost of a sequential O(E alpha) pass inside each ~100k-edge
-    partition slice. The iterative engines remain preferable when the
-    edge list is so skewed that single-key slices exceed task memory."""
-    pairs = jaccard_pair_graph(spark, sf_dir)
-    return local_uf_components(pairs, "doc_a", "doc_b").select(
-        F.col("node").alias("doc_id"), "cluster_id"
-    )
 
 
 # ------------------------------------ LSH vs exact: precision / recall

@@ -497,13 +497,13 @@ def q_dedup_keep_manifest(
     pipeline applies, byte-identity being the stronger claim.
 
     Composition: exact groups are one window over the sha256 hash;
-    near clusters reuse q_dedup_ngram_jaccard + min_label_components;
+    near clusters reuse q_dedup_ngram_jaccard + local_uf_components;
     the manifest is a left join of vertex-sized tables. This is what
     pipeline_corpus_clean's keep-first rule generalizes to when the
     dedup signal is fuzzy."""
     from mapreducegcp_spark.operators.dedup import (
         jaccard_pair_graph,
-        min_label_components,
+        local_uf_components,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -514,7 +514,7 @@ def q_dedup_keep_manifest(
     )
     if pairs is None:
         pairs = jaccard_pair_graph(spark, sf_dir)
-    clusters = min_label_components(pairs, "doc_a", "doc_b").select(
+    clusters = local_uf_components(pairs, "doc_a", "doc_b").select(
         F.col("node").alias("doc_id"), F.col("cluster_id").alias("near_rep")
     )
     j = exact.join(clusters, "doc_id", "left")

@@ -1,4 +1,4 @@
-"""Engine-vs-engine cross-verification of the 20 oracle-excluded
+"""Engine-vs-engine cross-verification of the 17 oracle-excluded
 queries at blowup volume, frozen as an opt-in test.
 
 SCALE.md's round-9 "cross-verified at 100x" table is committed prose;
@@ -10,8 +10,8 @@ rebuilt per round):
     RUN_SCALE_PROBE=1 python -m pytest tests/test_crossverify100.py -q
 
 Three layers (see tools/crossverify100.py for the full argument):
-stratum strict-oracle over all 20; the four component engines
-row-for-row on shared full-volume pair graphs; restriction equality +
+stratum strict-oracle over all 17; the served component engine and
+its two-phase fallback row-for-row on shared full-volume pair graphs; restriction equality +
 closure re-derivation against the DuckDB graph.
 """
 
@@ -54,9 +54,9 @@ def test_stratum_oracle_all_20_exact(spark, stratum):
 
 @need_corpus
 def test_component_engines_agree_at_full_volume(spark, stratum):
-    """min-label / two-phase / local-UF / recursive-CTE row-for-row
-    equal on the uniform-100x LSH graph; the three scalable engines
-    also on the 10x-skew verbatim-clique graph (~2.5M edges)."""
+    """local-UF and its two-phase fallback row-for-row equal on the
+    uniform-100x LSH graph and on the 10x-skew verbatim-clique graph
+    (~2.5M edges)."""
     res = cv.step_engines(spark)
     assert res["ok"], res
 

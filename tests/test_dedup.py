@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import itertools
+
+import pytest
 from pyspark.sql import functions as F
 
 from mapreducegcp_spark.registry import get_query
@@ -62,7 +65,7 @@ def test_leakage_safe_split_keeps_dup_groups_together(spark, sf_dir):
     assert checked > 0, "fixture has no duplicate groups to check"
 
 
-# ---------------- property: min-label components == union-find oracle
+# ---------------- property: components engines == union-find oracle
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -86,37 +89,6 @@ def _union_find_components(edges):
             # min-attach keeps every root the component minimum
             parent[max(ra, rb)] = min(ra, rb)
     return {n: find(n) for n in parent}
-
-
-@settings(
-    max_examples=5,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 24), st.integers(0, 24)).filter(
-            lambda e: e[0] != e[1]
-        ),
-        min_size=1,
-        max_size=40,
-    )
-)
-def test_min_label_components_matches_union_find(spark, edges):
-    """The iterative min-label loop (shared by 4 cluster-resolution
-    queries) must agree with a sequential union-find on arbitrary
-    graphs — chains, stars, cycles, disjoint blobs, whatever
-    hypothesis shrinks to."""
-    from mapreducegcp_spark.operators.dedup import min_label_components
-
-    pairs = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in edges], "a long, b long"
-    )
-    got = {
-        r["node"]: r["cluster_id"]
-        for r in min_label_components(pairs, "a", "b").collect()
-    }
-    assert got == _union_find_components(edges)
 
 
 @settings(
@@ -194,19 +166,48 @@ def test_two_phase_block_probe_sees_every_checkpoint(spark):
     assert all(mx <= rows for _, rows, mx in seen if rows)
 
 
-def test_min_label_components_raises_past_diameter_cap(spark):
-    """A 60-node path exceeds the 50-round diameter bound — the loop
-    must raise (silently-unconverged labels would be wrong), naming
-    the two-phase engine as the fix."""
-    import pytest
+# Graph shapes that broke or bounded a retired engine, kept as inputs:
+# a chain past a depth-4 reachability walk (the defect class the
+# 100x engine cross-check caught), a 300-clique (44,850 edges, the
+# path-explosion shape) and a 40-deep chain (past a fixed depth or
+# round budget).
+_CARRIED_SHAPES = {
+    "chain_depth6": [(i, i + 1) for i in range(6)],
+    "clique_300": list(itertools.combinations(range(300), 2)),
+    "chain_depth40": [(i, i + 1) for i in range(40)],
+}
 
-    from mapreducegcp_spark.operators.dedup import min_label_components
 
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(59)], "a long, b long"
-    )
-    with pytest.raises(RuntimeError, match="two_phase_components"):
-        min_label_components(pairs, "a", "b").collect()
+@pytest.mark.parametrize("shape", list(_CARRIED_SHAPES))
+@pytest.mark.parametrize("engine", ["local_uf_components", "two_phase_components"])
+def test_engines_resolve_carried_shapes(spark, engine, shape):
+    from mapreducegcp_spark.operators import dedup
+
+    edges = _CARRIED_SHAPES[shape]
+    pairs = spark.createDataFrame(edges, "a long, b long")
+    got = {
+        r["node"]: r["cluster_id"]
+        for r in getattr(dedup, engine)(pairs, "a", "b").collect()
+    }
+    assert got == _union_find_components(edges)
+
+
+@pytest.mark.parametrize("query", ["dedup_connected_components", "dedup_keep_manifest"])
+def test_cluster_consumers_run_local_uf_components(spark, sf_dir, monkeypatch, query):
+    """Every duplicate-cluster consumer resolves its pair graph with
+    the one components engine."""
+    from mapreducegcp_spark.operators import dedup
+
+    calls = []
+    real = dedup.local_uf_components
+
+    def counting(pairs, a, b, *args, **kwargs):
+        calls.append((a, b))
+        return real(pairs, a, b, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "local_uf_components", counting)
+    get_query(query).fn(spark, sf_dir)
+    assert calls == [("doc_a", "doc_b")]
 
 
 def test_pair_graph_cache_bypassed_for_unstattable_corpus(spark, monkeypatch):
@@ -483,66 +484,6 @@ def test_incremental_df_cap_decisions_are_conservative(spark, sf_dir):
         and identity[d].match_doc_id == exact[d].match_doc_id
         for d in exact
     ), "an unreachable cap must be exact"
-
-
-def _pairs_df(spark, edges):
-    return spark.createDataFrame(edges, "doc_a long, doc_b long")
-
-
-def test_recursive_sql_resolves_diameter_5_chain(spark):
-    """The defect class the round-9 engine-vs-engine 100x cross-check
-    caught: a bare depth-4 reachability walk silently mislabels a
-    diameter-5 component (the uniform-100x LSH graph grew one from
-    cross-copy chains). The contraction pre-rounds must cover it and
-    agree with the iterative engine."""
-    from mapreducegcp_spark.operators.dedup import (
-        min_label_components,
-        recursive_sql_components,
-    )
-
-    chain = _pairs_df(spark, [(i, i + 1) for i in range(6)])  # diameter 6... 0-6
-    rec = sorted(tuple(r) for r in recursive_sql_components(spark, chain).collect())
-    ref = sorted(
-        tuple(r)
-        for r in min_label_components(chain, "doc_a", "doc_b")
-        .select(F.col("node").alias("doc_id"), "cluster_id")
-        .collect()
-    )
-    assert rec == ref
-    assert all(c == 0 for _, c in rec)
-
-
-def test_recursive_sql_collapses_cliques_before_walking(spark):
-    """A verbatim-duplicate clique is the path-explosion shape
-    (k*(k-1)^depth reachability rows); the contraction pre-round must
-    collapse it so the walk sees no clique edges. 300-clique = 44,850
-    edges; bare depth-4 would materialize ~8e9 paths — this must
-    finish fast and exactly."""
-    import itertools
-
-    from mapreducegcp_spark.operators.dedup import recursive_sql_components
-
-    k = 300
-    clique = _pairs_df(
-        spark, [(a, b) for a, b in itertools.combinations(range(k), 2)]
-    )
-    out = sorted(
-        tuple(r) for r in recursive_sql_components(spark, clique).collect()
-    )
-    assert out == [(i, 0) for i in range(k)]
-
-
-def test_recursive_sql_guard_fails_loud_on_deep_graph(spark):
-    """A graph deeper than the contraction+depth budget must RAISE
-    (the fail-loud contract), never return plausible-but-wrong
-    clusters — the silent-mislabel failure mode the cross-check
-    caught is permanently fenced."""
-    import pytest
-    from mapreducegcp_spark.operators.dedup import recursive_sql_components
-
-    deep = _pairs_df(spark, [(i, i + 1) for i in range(40)])
-    with pytest.raises(Exception, match="contraction\\+depth budget"):
-        recursive_sql_components(spark, deep).collect()
 
 
 def test_exact_group_map_null_text_docs_are_singletons(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Every registered oracle must be valid DuckDB SQL over the real schema.
 
-This binds every registered oracle (288 today) with DuckDB EXPLAIN
+This binds every registered oracle (285 today) with DuckDB EXPLAIN
 (bind + plan, no execution) against views over the smoke-scale
 parquet — pure DuckDB, no Spark session, ~seconds for the whole
 catalog — so an oracle typo fails here even for a query no value

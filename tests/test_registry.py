@@ -26,7 +26,7 @@ def test_all_queries_is_registration_order_without_repo_state(monkeypatch, tmp_p
     monkeypatch.setattr(subprocess, "run", no_subprocess)
     monkeypatch.chdir(tmp_path)
     again = registry.all_queries()
-    assert len(again) == 288
+    assert len(again) == 285
     assert list(again) == list(qs)
 
 

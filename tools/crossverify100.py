@@ -1,8 +1,9 @@
 #!/usr/bin/env python
-"""Engine-vs-engine cross-verification at the 100x corpus for the 20
-oracle-excluded queries (SCALE.md round-8 exclusion register).
+"""Engine-vs-engine cross-verification at the 100x corpus for the 17
+oracle-excluded queries (SCALE.md round-8 exclusion register, minus
+the three alias cluster queries retired with their engines).
 
-Those 20 are excluded from the full-catalog strict sweep at
+Those 17 are excluded from the full-catalog strict sweep at
 /tmp/blowup/sf10 because the DUCKDB ORACLE is quadratic at that
 volume (exact pair-graph / all-pairs families) — the engines are not.
 This tool closes the evidence gap without the intractable oracle:
@@ -14,22 +15,17 @@ A. STRATUM ORACLE (--stratum): materialize a deterministic stratum OF
    population; the replicated-identical-vector cliques appear, giving
    the embedding dedup family real multi-copy duplicate structure) —
    then run the UNCHANGED strict Spark-vs-DuckDB compare
-   (tools/check_oracles.py) for all 20 on it. ~9.5k docs / ~4k
+   (tools/check_oracles.py) for all 17 on it. ~9.5k docs / ~4k
    vectors keeps every quadratic oracle tractable (the 3x full sweep
    ran the same oracles at 15k docs). This is a value-level check of
    every excluded query on 100x-DISTRIBUTION data.
 
-B. COMPONENT ENGINES (--engines): the four duplicate-cluster
-   resolution engines (min-label propagation, alternating
-   large-star/small-star, partition-local union-find + contraction,
-   recursive-CTE reachability) must agree ROW-FOR-ROW on shared pair
-   graphs at full blowup volume: all four on the uniform-100x
-   MinHash-LSH pair graph (small components — inside the recursive
-   engine's documented validity domain), and the three scalable
-   engines additionally on the 10x-skew corpus's verbatim-cluster
-   graph (a ~2.5M-edge clique from 2,244 identical documents; the
-   recursive CTE is excluded there BY ITS DOCUMENTED PRECONDITION —
-   reachability materialization is O(sum of component^2) rows).
+B. COMPONENT ENGINES (--engines): the served duplicate-cluster
+   engine (partition-local union-find + contraction) and its fallback
+   (alternating large-star/small-star) must agree ROW-FOR-ROW on
+   shared pair graphs at full blowup volume: the uniform-100x
+   MinHash-LSH pair graph, and the 10x-skew corpus's verbatim-cluster
+   graph (a ~2.5M-edge clique from 2,244 identical documents).
 
 C. RESTRICTION EQUALITY + CLOSURE RE-DERIVATION (--restrict):
    pair membership in dedup_minhash_lsh is a pairwise predicate of
@@ -93,17 +89,14 @@ ALLPAIRS_10X = [
 ]
 
 # The exclusion register (SCALE.md "Full-catalog strict sweep at the
-# 100x corpus"), verbatim.
-EXCLUDED_20 = [
+# 100x corpus"), minus the three retired alias cluster queries.
+EXCLUDED = [
     "dedup_ngram_jaccard",
     "dedup_ngram_containment",
     "dedup_lsh_eval",
     "dedup_simhash_eval",
     "dedup_semantic_vs_lexical_eval",
     "dedup_connected_components",
-    "dedup_clusters_recursive_sql",
-    "dedup_clusters_twophase",
-    "dedup_clusters_localuf",
     "dedup_keep_manifest",
     "split_leakage_safe",
     "split_leakage_audit",
@@ -149,7 +142,7 @@ def build_stratum(
 
 
 def step_stratum() -> dict:
-    """Strict Spark-vs-DuckDB compare of all 20 on the stratum, via
+    """Strict Spark-vs-DuckDB compare of all 17 on the stratum, via
     the unchanged checker (subprocess: its own session + conf).
     ``queries`` in the result maps each query to its per-line outcome
     (pass/fail/rows_only) so sweep100 --receipts can write per-query
@@ -161,7 +154,7 @@ def step_stratum() -> dict:
             str(Path(__file__).parent / "check_oracles.py"),
             "--sf-dir", STRAT,
             "--duckdb-mem", "24GB",
-            *EXCLUDED_20,
+            *EXCLUDED,
         ],
         capture_output=True,
         text=True,
@@ -170,7 +163,7 @@ def step_stratum() -> dict:
     sys.stdout.write(proc.stdout)
     tail = [l for l in proc.stdout.splitlines() if l.strip()]
     summary = tail[-1] if tail else ""
-    ok = summary.startswith(f"{len(EXCLUDED_20)} pass, 0 fail")
+    ok = summary.startswith(f"{len(EXCLUDED)} pass, 0 fail")
     if not ok:
         sys.stderr.write(proc.stderr[-4000:])
     status_map = {"PASS": "pass", "FAIL": "fail", "SKIP": "rows_only"}
@@ -226,74 +219,46 @@ def step_engines(spark: SparkSession) -> dict:
     from mapreducegcp_spark.functions.checkpoint import safe_checkpoint
     from mapreducegcp_spark.operators.dedup import (
         local_uf_components,
-        min_label_components,
         q_dedup_minhash_lsh,
-        recursive_sql_components,
         two_phase_components,
     )
 
-    results = {}
-
-    # Tier 1: uniform 100x LSH pair graph, all four engines. This
-    # tier caught a real defect in round 9: the graph has a
-    # diameter-5 component (cross-copy LSH chains) that the
-    # recursive engine's bare depth-4 walk silently mislabeled —
-    # fixed by its contraction pre-rounds + fixpoint guard.
-    t0 = time.time()
-    # safe_checkpoint, not a raw localCheckpoint: the intra expansion
-    # emits one verbatim cluster's pairs into a single partition, and
-    # a lineage-truncated hot block that cannot cache is unrecoverable
-    # (functions/checkpoint.py) — measured at this very tier.
-    pairs = safe_checkpoint(
-        q_dedup_minhash_lsh(spark, BIG).select("doc_a", "doc_b")
-    )  # materialize once, four consumers
-    n_edges = pairs.count()
     engines = {
-        "min_label": lambda p: min_label_components(p, "doc_a", "doc_b")
-        .select(F.col("node").alias("doc_id"), "cluster_id"),
-        "two_phase": lambda p: two_phase_components(p, "doc_a", "doc_b")
-        .select(F.col("node").alias("doc_id"), "cluster_id"),
-        "local_uf": lambda p: local_uf_components(p, "doc_a", "doc_b")
-        .select(F.col("node").alias("doc_id"), "cluster_id"),
-        "recursive_sql": lambda p: recursive_sql_components(spark, p),
+        "local_uf": local_uf_components,
+        "two_phase": two_phase_components,
     }
-    outs = {name: _canon(fn(pairs)) for name, fn in engines.items()}
-    ref = outs["min_label"]
-    agree = all(v == ref for v in outs.values())
-    results["uniform_100x"] = {
-        "edges": n_edges,
-        "nodes": len(ref),
-        "engines": 4,
-        "agree": agree,
-        "sec": round(time.time() - t0, 1),
-    }
-    if not agree:
-        for k, v in outs.items():
-            print(k, "first rows:", v[:5], "n:", len(v))
 
-    # Tier 2: 10x-skew verbatim-cluster graph (~2.5M-edge clique),
-    # all four engines — the recursive engine's contraction pre-round
-    # collapses the clique before any reachability walk, so the
-    # path-enumeration explosion that excluded it in round 8 is gone.
-    if Path(SKEW).exists():
+    def agreement(sf_dir: str, tag: str) -> dict:
         t0 = time.time()
-        pairs_s = safe_checkpoint(
-            q_dedup_minhash_lsh(spark, SKEW).select("doc_a", "doc_b")
-        )
-        n_edges_s = pairs_s.count()
-        outs_s = {name: _canon(fn(pairs_s)) for name, fn in engines.items()}
-        ref_s = outs_s["min_label"]
-        agree_s = all(v == ref_s for v in outs_s.values())
-        results["skew_clique_10x"] = {
-            "edges": n_edges_s,
-            "nodes": len(ref_s),
-            "engines": 4,
-            "agree": agree_s,
+        # safe_checkpoint, not a raw localCheckpoint: the intra expansion
+        # emits one verbatim cluster's pairs into a single partition, and
+        # a lineage-truncated hot block that cannot cache is unrecoverable
+        # (functions/checkpoint.py) — measured at the uniform-100x tier.
+        pairs = safe_checkpoint(
+            q_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
+        )  # materialize once, both engines read it
+        n_edges = pairs.count()
+        outs = {name: _canon(fn(pairs, "doc_a", "doc_b")) for name, fn in engines.items()}
+        ref = outs["local_uf"]
+        agree = all(v == ref for v in outs.values())
+        if not agree:
+            for k, v in outs.items():
+                print(tag, k, "first rows:", v[:5], "n:", len(v))
+        return {
+            "edges": n_edges,
+            "nodes": len(ref),
+            "engines": len(engines),
+            "agree": agree,
             "sec": round(time.time() - t0, 1),
         }
-        if not agree_s:
-            for k, v in outs_s.items():
-                print("skew", k, "first rows:", v[:5], "n:", len(v))
+
+    # Tier 1: uniform 100x LSH pair graph. In round 9 this tier caught
+    # a diameter-5 component (cross-copy LSH chains) that a bare
+    # depth-4 reachability walk silently mislabeled.
+    results = {"uniform_100x": agreement(BIG, "uniform")}
+    # Tier 2: 10x-skew verbatim-cluster graph (~2.5M-edge clique).
+    if Path(SKEW).exists():
+        results["skew_clique_10x"] = agreement(SKEW, "skew")
     else:
         results["skew_clique_10x"] = {"skipped": f"{SKEW} absent"}
 

@@ -30,9 +30,10 @@ property tests). Generated by `tools/gen_catalog.py` — do not edit.
 RETIRED_NAMES = """
 ## Retired names (lineage for CORRECTNESS_r* audits)
 
-Four names that appear with green rows in early CORRECTNESS artifacts
-were FOLDED into successor queries, not dropped — anyone diffing the
-registry against r1/r2 artifacts should map them as follows:
+Seven names that appear with green rows in earlier CORRECTNESS /
+SWEEP100 artifacts were FOLDED into successor queries, not dropped —
+anyone diffing the registry against those artifacts should map them as
+follows:
 
 | retired name (last green) | absorbed into (round) | what changed |
 |---|---|---|
@@ -40,6 +41,9 @@ registry against r1/r2 artifacts should map them as follows:
 | `similarity_ann_ivf_recall` (r2) | `similarity_ann_ivf` (r3) | same fold |
 | `similarity_ann_pq_recall` (r2) | `similarity_ann_pq` (r3) | same fold |
 | `agg_approx_distinct` (never green) | `agg_approx_distinct_tol` (r1) | HLL output is engine-specific; re-registered with an explicit tolerance gate the oracle can state |
+| `dedup_clusters_recursive_sql` (r11) | `dedup_connected_components` | alias that only picked a components engine (same oracle); every cluster consumer now runs `local_uf_components` |
+| `dedup_clusters_twophase` (r11) | `dedup_connected_components` | same fold; two-phase remains as the served engine's fallback |
+| `dedup_clusters_localuf` (r11) | `dedup_connected_components` | same fold; its engine now serves every cluster consumer |
 
 The raw ANN top-k plans remain public as the unregistered
 `q_similarity_ann_{lsh,ivf,pq}` functions (tests call them directly);

@@ -368,35 +368,35 @@ def skew_probe(spark: SparkSession, sf_dir: str, hot_share_pct: int = 50) -> Non
 def chain_probe(spark: SparkSession, n_nodes: int = 10_000) -> None:
     """Connected components on a PATH graph — diameter = n_nodes - 1.
 
-    Label propagation pays one round per diameter hop (50-round cap ->
-    it refuses this graph); the two-phase large-star/small-star engine
-    converges in O(log n) alternations. This probe is the empirical
-    round-complexity receipt behind shipping both engines."""
+    Diameter-round label propagation would pay one round per hop; the
+    two-phase large-star/small-star engine converges in O(log n)
+    alternations, and the served engine (local_uf_components) either
+    contracts the path or falls back to two-phase when its boundary
+    stops shrinking. This probe is the empirical round-complexity
+    receipt for both, on the same shape."""
     from mapreducegcp_spark.operators.dedup import (
-        min_label_components,
+        local_uf_components,
         two_phase_components,
     )
 
     pairs = spark.range(n_nodes - 1).select(
         F.col("id").alias("a"), (F.col("id") + 1).alias("b")
     )
-    t0 = time.time()
-    out = two_phase_components(pairs, "a", "b")
-    roots = out.agg(
-        F.countDistinct("cluster_id").alias("n_comp"),
-        F.count("*").alias("n_nodes"),
-    ).first()
-    dt = time.time() - t0
-    print(
-        f"two_phase_components: path of {n_nodes} nodes "
-        f"(diameter {n_nodes - 1}) -> {roots['n_comp']} component, "
-        f"{roots['n_nodes']} nodes labelled, {dt:.1f}s"
-    )
-    try:
-        min_label_components(pairs.limit(2_000), "a", "b").count()
-        print("min_label_components: UNEXPECTEDLY converged")
-    except RuntimeError as exc:
-        print(f"min_label_components on the same shape: {exc}")
+    for name, engine in (
+        ("two_phase_components", two_phase_components),
+        ("local_uf_components", local_uf_components),
+    ):
+        t0 = time.time()
+        roots = engine(pairs, "a", "b").agg(
+            F.countDistinct("cluster_id").alias("n_comp"),
+            F.count("*").alias("n_nodes"),
+        ).first()
+        dt = time.time() - t0
+        print(
+            f"{name}: path of {n_nodes} nodes "
+            f"(diameter {n_nodes - 1}) -> {roots['n_comp']} component, "
+            f"{roots['n_nodes']} nodes labelled, {dt:.1f}s"
+        )
 
 
 def main() -> None:

@@ -63,9 +63,6 @@ PRE_EXCLUDED = {
     "dedup_simhash_eval": ("eval against the exact pair graph (quadratic oracle)", "3x"),
     "dedup_semantic_vs_lexical_eval": ("eval joins the exact lexical pair graph (quadratic oracle)", "3x"),
     "dedup_connected_components": ("recursive-CTE closure over the quadratic pair graph", "3x"),
-    "dedup_clusters_recursive_sql": ("recursive-CTE closure over the quadratic pair graph", "3x"),
-    "dedup_clusters_twophase": ("recursive-CTE closure over the quadratic pair graph", "3x"),
-    "dedup_clusters_localuf": ("recursive-CTE closure over the quadratic pair graph", "3x"),
     "dedup_keep_manifest": ("manifest derives from the quadratic pair graph", "3x"),
     "decontaminate_ngram_overlap": ("train x test n-gram join saturates at blowup vocabulary", "3x"),
     "split_leakage_safe": ("leakage graph is the quadratic pair graph", "3x"),
@@ -85,9 +82,10 @@ PRE_EXCLUDED = {
 
 # Round 9 closed the residual gap for every PRE_EXCLUDED query
 # without the intractable oracle: tools/crossverify100.py runs the
-# UNCHANGED strict compare for all 20 on a deterministic 100x-corpus
-# stratum (20/20 exact), checks the four cluster engines row-for-row
-# on full-volume pair graphs, and pins restriction-equality /
+# UNCHANGED strict compare for every one on a deterministic 100x-corpus
+# stratum (20/20 exact then; 17 since three alias cluster queries were
+# retired), checks the served components engine row-for-row against
+# its two-phase fallback on full-volume pair graphs, and pins restriction-equality /
 # closure re-derivation — executable via
 # RUN_SCALE_PROBE=1 pytest tests/test_crossverify100.py.
 #
@@ -101,15 +99,10 @@ PRE_EXCLUDED = {
 # SCALE.md.
 
 # PRE_EXCLUDED queries whose crossverify receipt goes beyond the
-# stratum: the four cluster engines agree row-for-row at FULL blowup
-# volume, and the LSH pair graph's full-100x run is restriction-checked
+# stratum: the served components engine agrees row-for-row with its
+# two-phase fallback at FULL blowup volume, and the LSH pair graph's full-100x run is restriction-checked
 # against the stratum oracle (see crossverify100 steps B/C).
-ENGINE_AGREEMENT = {
-    "dedup_connected_components",
-    "dedup_clusters_recursive_sql",
-    "dedup_clusters_twophase",
-    "dedup_clusters_localuf",
-}
+ENGINE_AGREEMENT = {"dedup_connected_components"}
 RESTRICTION_CHECKED = {"dedup_keep_manifest", "split_leakage_safe"}
 
 
@@ -216,8 +209,8 @@ def shard_todo(
 def run_receipts(names: list[str], done: dict[str, dict]) -> None:
     """Record crossverify value receipts for the PRE_EXCLUDED register
     as per-query rows (verdict r10 ask #2): stratum strict-compare
-    outcome for all 20, engine-agreement counts for the four cluster
-    engines, restriction/re-derivation for the closure queries."""
+    outcome for each, engine-agreement counts for the cluster query,
+    restriction/re-derivation for the closure queries."""
     sys.path.insert(0, str(REPO / "tools"))
     import crossverify100 as cv
 
@@ -245,7 +238,7 @@ def run_receipts(names: list[str], done: dict[str, dict]) -> None:
         ]
         if n in ENGINE_AGREEMENT and uni.get("agree"):
             receipts.append(
-                f"4-engine row-for-row agreement at full 100x volume "
+                f"local_uf/two_phase row-for-row agreement at full 100x volume "
                 f"({uni.get('edges')} edges, {uni.get('nodes')} nodes"
                 + (
                     f"; 10x-skew clique {skew.get('edges')} edges"

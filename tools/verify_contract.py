@@ -13,8 +13,8 @@ real consumer would use, then:
 
 1. entry smoke: > 0 rows, stable schema;
 2. contract: set(queries()) == set(oracle_sql());
-3. strict compare (sorted column names, sorted repr'd row multisets —
-   the driver's method) for the first ``--front`` catalog queries
+3. strict compare (check_oracles.normalize, then the same repr
+   compare check_oracles makes) for the first ``--front`` catalog queries
    (registration order) plus any names passed on the command line;
 4. edge probes: nonexistent sf_dir raises cleanly, empty literal
    corpus yields empty wordcount, unknown table -> KeyError.
@@ -36,10 +36,6 @@ import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def main() -> int:
@@ -59,8 +55,12 @@ def main() -> int:
         return subprocess.run(cmd, cwd="/tmp").returncode
 
     sys.path.insert(0, str(REPO))
+    sys.path.insert(0, str(REPO / "tools"))
     import __spark_entry__ as e
+    from check_oracles import normalize
     from pyspark.sql import SparkSession
+
+    from mapreducegcp_spark.sources.catalog import TABLES, docs_from_string, load_table
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -93,12 +93,9 @@ def main() -> int:
         t0 = time.time()
         sdf = qs[name](spark, args.sf_dir).toPandas()
         ddf = con.execute(oracles[name]).fetchdf()
-        cols = sorted(sdf.columns)
-        ok = cols == sorted(ddf.columns)
-        if ok:
-            a = sorted(tuple(repr(v) for v in r) for r in sdf[cols].itertuples(index=False))
-            b = sorted(tuple(repr(v) for v in r) for r in ddf[cols].itertuples(index=False))
-            ok = a == b
+        scols, srows = normalize(sdf)
+        dcols, drows = normalize(ddf)
+        ok = scols == dcols and list(map(repr, srows)) == list(map(repr, drows))
         print(("PASS" if ok else "FAIL"),
               f"{name} ({len(sdf)} rows, {time.time() - t0:.1f}s)", flush=True)
         if not ok:
@@ -112,8 +109,6 @@ def main() -> int:
         probes["missing_sf_dir"] = "NO RAISE (bad)"
     except Exception as ex:  # noqa: BLE001 — any clean raise is the pass
         probes["missing_sf_dir"] = type(ex).__name__
-    from mapreducegcp_spark.sources.catalog import docs_from_string, load_table
-
     probes["empty_literal_docs"] = docs_from_string(spark, "").count()
     try:
         load_table(spark, args.sf_dir, "nope")
