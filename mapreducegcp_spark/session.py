@@ -10,6 +10,11 @@ the same code runs on a real cluster — AQE handles runtime partition
 coalescing and skew joins, shuffle partitions default to the core count
 locally (a cluster submit would set it to ~2-3x total cores or rely on
 AQE), and Arrow is enabled for any pandas-UDF path.
+
+PySpark's call-site capture (``spark.python.sql.dataFrameDebugging``)
+is off: it costs about five py4j round trips per Column expression a
+builder creates. Analysis errors then lose the Python ``file:line`` in
+their DataFrame context; Python and JVM stack traces are unchanged.
 """
 
 from __future__ import annotations
@@ -53,6 +58,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

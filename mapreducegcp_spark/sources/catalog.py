@@ -18,6 +18,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from mapreducegcp_spark.functions.memo import memo, stamp
 
 TABLES = (
     "region",
@@ -41,6 +44,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``nanosAsLong``) and truncated to microseconds with integer
     arithmetic — the same truncation DuckDB applies, so timestamps stay
     oracle-comparable.
+
+    The file's schema comes from ``table_schema``, probed after the two
+    conf sets below, so a warm read launches no schema-inference job.
+    A file rewritten in place gets a new stamp and is probed again.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -53,7 +60,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # only in session.py, because callers may hand in their own session
     # (the driver does).
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(table_schema(spark, path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # integer div (not double /): a double round-trip can round a
         # ...999 nanos tail up and disagree with true floor division.
@@ -64,6 +72,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if dtype == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
+
+
+def table_schema(spark: SparkSession, path: str) -> StructType:
+    """Schema of the parquet table at ``path``, memoized per file
+    (functions/memo.py). Inferring it launches one Spark job per read;
+    batch and stream readers of a table share this one probe."""
+    return memo(
+        spark, "parquet_schema", path, stamp(path),
+        lambda: spark.read.parquet(path).schema,
+    )
 
 
 def docs_from_dir(spark: SparkSession, path: str) -> DataFrame:

@@ -31,9 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreducegcp_spark.functions.exact import dsum, o_dec2, o_dsum
-from mapreducegcp_spark.functions.memo import memo, stamp
 from mapreducegcp_spark.registry import register
-from mapreducegcp_spark.sources.catalog import load_table
+from mapreducegcp_spark.sources.catalog import load_table, table_schema
 
 WATERMARK_DELAY = "10 minutes"
 SESSION_GAP = "5 minutes"
@@ -69,17 +68,6 @@ def _table_stream(spark: SparkSession, sf_dir: str, leaf: str, schema) -> DataFr
     )
 
 
-def _probed_schema(spark: SparkSession, path: str):
-    """File schema of the parquet table at ``path``, which the stream
-    reader requires. Probing it is a batch read (~0.3-0.4s of driver
-    footer I/O + inference per call, twice for the two-source
-    stream-stream join), so it is memoized per file (functions/memo.py)."""
-    return memo(
-        spark, "parquet_schema", path, stamp(path),
-        lambda: spark.read.parquet(path).schema,
-    )
-
-
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as a streaming DataFrame (file-source replay).
 
@@ -95,7 +83,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # set here too because the schema probe below bypasses load_table
     # and the caller's session (the driver's) may not have it set.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    raw_schema = _probed_schema(spark, path)
+    raw_schema = table_schema(spark, path)
     sdf = _table_stream(spark, sf_dir, "events.parquet", raw_schema)
     if dict(sdf.dtypes).get("ts") == "bigint":
         sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -929,7 +917,7 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay) — the corpus arriving as a feed, the shape of continuous
     ingest dedup."""
     path = os.path.join(sf_dir, "documents.parquet")
-    schema = _probed_schema(spark, path)
+    schema = table_schema(spark, path)
     return _table_stream(spark, sf_dir, "documents.parquet", schema)
 
 

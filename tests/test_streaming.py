@@ -601,36 +601,6 @@ def test_stream_checkpoint_recovery_exactly_once(spark, tmp_path):
     )
 
 
-def test_schema_probe_memo_hits_and_invalidates(spark, tmp_path):
-    """The per-session schema memo serves repeated probes of the same
-    file without re-reading it, and a rewritten file (new mtime/size)
-    misses and replaces the entry — a stale schema must never survive
-    a corpus swap."""
-    import mapreducegcp_spark.functions.memo as memo
-    import mapreducegcp_spark.streaming.events as ev
-
-    p = tmp_path / "t.parquet"
-
-    def entries():
-        return [v for k, v in memo._ENTRIES.items() if k[1] == str(p)]
-
-    spark.range(3).selectExpr("id AS a").write.mode("overwrite").parquet(str(p))
-    s1 = ev._probed_schema(spark, str(p))
-    assert [f.name for f in s1.fields] == ["a"]
-    assert len(entries()) == 1
-    # hit: same object back, no new entry
-    assert ev._probed_schema(spark, str(p)) is s1
-    assert len(entries()) == 1
-    # rewrite with a different schema -> stamp changes, fresh probe
-    spark.range(3).selectExpr("id AS a", "id AS b").write.mode(
-        "overwrite"
-    ).parquet(str(p))
-    s2 = ev._probed_schema(spark, str(p))
-    assert [f.name for f in s2.fields] == ["a", "b"]
-    # one entry, holding the fresh schema
-    assert [v for _, v in entries()] == [s2]
-
-
 def test_ephemeral_checkpoint_root_and_cleanup(spark, monkeypatch, tmp_path):
     """Round-13 floor fix: finite-replay queries put their checkpoint
     (offset WAL + commits + state) on tmpfs — it is ephemeral by

@@ -126,6 +126,7 @@ def main() -> int:
         con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{src}'")
 
     n_pass = n_fail = n_skip = 0
+    t_sweep = time.time()
     for name in names:
         rq = qs[name]
         t0 = time.time()
@@ -170,7 +171,8 @@ def main() -> int:
                 print("  spark head:", srows[:3])
                 print("  duck  head:", drows[:3])
 
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_skip} rows-only")
+    print(f"\n{n_pass} pass, {n_fail} fail, {n_skip} rows-only, "
+          f"{time.time() - t_sweep:.1f}s summed over the queries")
     return 1 if n_fail else 0
 
 

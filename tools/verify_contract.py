@@ -60,6 +60,7 @@ def main() -> int:
     from check_oracles import normalize
     from pyspark.sql import SparkSession
 
+    from mapreducegcp_spark.operators.wordcount import word_count
     from mapreducegcp_spark.sources.catalog import TABLES, docs_from_string, load_table
 
     spark = (
@@ -109,7 +110,8 @@ def main() -> int:
         probes["missing_sf_dir"] = "NO RAISE (bad)"
     except Exception as ex:  # noqa: BLE001 — any clean raise is the pass
         probes["missing_sf_dir"] = type(ex).__name__
-    probes["empty_literal_docs"] = docs_from_string(spark, "").count()
+    n = word_count(docs_from_string(spark, "")).count()
+    probes["empty_literal_docs"] = n if n == 0 else f"{n} wordcount rows (bad)"
     try:
         load_table(spark, args.sf_dir, "nope")
         probes["unknown_table"] = "NO RAISE (bad)"
