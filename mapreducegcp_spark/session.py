@@ -15,6 +15,16 @@ PySpark's call-site capture (``spark.python.sql.dataFrameDebugging``)
 is off: it costs about five py4j round trips per Column expression a
 builder creates. Analysis errors then lose the Python ``file:line`` in
 their DataFrame context; Python and JVM stack traces are unchanged.
+
+Python workers fork from the engine's daemon,
+``mapreducegcp_spark.pyworker``, not from ``pyspark.daemon``. PySpark
+calls ``importlib.invalidate_caches()`` in every Python task, and under
+Python 3.11 that re-reads ``pyspark.zip``'s directory once per cached
+zipimporter, about 0.1 s of CPU per task; the daemon skips the re-read
+of unchanged archives. It has to be the daemon module: PySpark ignores
+a ``spark.python.worker.module`` outside ``pyspark``. Workers find the
+package through ``spark.executorEnv.PYTHONPATH``, so Python tasks run
+whatever the driver's working directory is.
 """
 
 from __future__ import annotations
@@ -24,6 +34,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
+# the directory that holds this package, for the Python workers' path
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def sf_dir_from_env() -> str:
@@ -59,6 +71,8 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.python.daemon.module", "mapreducegcp_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

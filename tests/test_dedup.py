@@ -121,19 +121,6 @@ def test_two_phase_components_matches_union_find(spark, edges):
     assert got == _union_find_components(edges)
 
 
-def test_two_phase_components_long_chain(spark):
-    """A 40-node path (diameter 39) — the shape that takes label
-    propagation 39 rounds — must resolve to one component."""
-    from mapreducegcp_spark.operators.dedup import two_phase_components
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(39)], "a long, b long"
-    )
-    out = two_phase_components(pairs, "a", "b").collect()
-    assert {r["node"] for r in out} == set(range(40))
-    assert {r["cluster_id"] for r in out} == {0}
-
-
 def test_two_phase_block_probe_sees_every_checkpoint(spark):
     """The ``block_probe`` hook (the executable form of the
     checkpoint-skew exemption, round-10 verdict ask #4) must fire for

@@ -322,20 +322,34 @@ SKEW_VERIFY = [
 ]
 
 
+# Shuffle partitions for the skew receipt, fixed so that the receipt
+# does not depend on the box: with 4 partitions (local[4]) the hot key
+# of the 3x tier (14% of orders) never reaches twice the median
+# partition. 32 is the core count the receipt was first taken on.
+SKEW_PARTITIONS = 32
+
+
 def skew_receipt(spark: SparkSession, big_dir: str) -> None:
     """Pin that AQE's skew-join split ENGAGES on the hot key and that
     the split execution returns the same bytes as the unsplit one.
 
     Forces the sort-merge path (broadcast off — at production volume
     the orders side is thousands of times the customer side and SMJ is
-    the real plan) with the skew thresholds scaled to this corpus the
-    same way production tunes them to task-size targets. Evidence:
+    the real plan) over SKEW_PARTITIONS shuffle partitions. The
+    unsplit run goes first and measures the larger join side's shuffle
+    bytes; the split run's thresholds are scaled from that, the way
+    production tunes them to task-size targets: the advisory size is
+    the mean partition, and a partition is skewed above twice the mean
+    (and above twice the median, ``skewedPartitionFactor``). Evidence:
     ``skew=true`` markers in the executed adaptive plan + identical
     sha256 with the skew-split disabled."""
+    from mapreducegcp_spark.profile import stages
+
     conf = spark.conf
     saved = {
         k: conf.get(k)
         for k in (
+            "spark.sql.shuffle.partitions",
             "spark.sql.autoBroadcastJoinThreshold",
             "spark.sql.adaptive.enabled",
             "spark.sql.adaptive.skewJoin.enabled",
@@ -367,26 +381,36 @@ def skew_receipt(spark: SparkSession, big_dir: str) -> None:
             )
         )
 
-    def run_once(split_on: bool):
+    def run_once(split_on: bool, mean_bytes: int = 0):
+        conf.set("spark.sql.shuffle.partitions", str(SKEW_PARTITIONS))
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         conf.set("spark.sql.adaptive.enabled", "true")
         conf.set("spark.sql.adaptive.skewJoin.enabled", str(split_on).lower())
-        conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-        conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1m"
-        )
-        conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
         conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", str(split_on).lower())
+        if split_on:
+            conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
+            conf.set(
+                "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
+                str(2 * mean_bytes),
+            )
+            conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(mean_bytes))
+        seen = {s.stageId() for s in stages(spark)}
         df = hot_join()
         t0 = time.time()
         rows = df.collect()
         sec = time.time() - t0
         plan = df._jdf.queryExecution().executedPlan().toString()
-        return (*row_hash_rows(rows), sec, plan)
+        # the larger of the join's two map sides: the hot (orders) one
+        shuffle = max(
+            (s.shuffleWriteBytes() for s in stages(spark) if s.stageId() not in seen),
+            default=0,
+        )
+        return (*row_hash_rows(rows), sec, plan, shuffle)
 
     try:
-        n_on, h_on, t_on, plan_on = run_once(True)
-        n_off, h_off, t_off, plan_off = run_once(False)
+        n_off, h_off, t_off, _, shuffle = run_once(False)
+        mean = max(1, shuffle // SKEW_PARTITIONS)
+        n_on, h_on, t_on, plan_on, _ = run_once(True, mean)
     finally:
         for k, v in saved.items():
             if v is None:
@@ -399,6 +423,9 @@ def skew_receipt(spark: SparkSession, big_dir: str) -> None:
             {
                 "receipt": "aqe_skew_split",
                 "rows": n_on,
+                "shuffle_bytes": shuffle,
+                "partitions": SKEW_PARTITIONS,
+                "advisory_bytes": mean,
                 "split_engaged": split_engaged,
                 "hash_equal": h_on == h_off,
                 "t_split_on": round(t_on, 2),
