@@ -2,7 +2,8 @@
 
 ``stages(spark)`` is the one reader of the application's stage list;
 the retry, spill and fetch-failure probes under ``tools/`` sum their
-own fields over it.
+own fields over it. ``codegen(spark)`` is the one reader of the JVM's
+generated-code compilation counters.
 """
 
 from __future__ import annotations
@@ -30,3 +31,20 @@ def stages(spark: SparkSession) -> list:
             "range(2, 6) in mapreducegcp_spark/profile.py"
         ) from e
     return [seq.apply(i) for i in range(seq.size())]
+
+
+def codegen(spark: SparkSession) -> tuple[int, float]:
+    """``(compilations, compile_s)``: how many generated classes the
+    JVM behind ``spark`` has compiled so far, and their summed compile
+    seconds. Both count only cache misses of Spark's codegen cache and
+    are cumulative and JVM-wide (every session, driver and local
+    tasks); diff two reads to measure a run.
+
+    The count is ``CodegenMetrics.METRIC_COMPILATION_TIME``'s; its
+    histogram keeps only a sample of the times, so the seconds come
+    from ``CodeGenerator.compileTime``, which sums the same
+    compilations exactly."""
+    jvm = spark._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(n), ns / 1e9

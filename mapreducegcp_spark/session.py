@@ -25,6 +25,22 @@ of unchanged archives. It has to be the daemon module: PySpark ignores
 a ``spark.python.worker.module`` outside ``pyspark``. Workers find the
 package through ``spark.executorEnv.PYTHONPATH``, so Python tasks run
 whatever the driver's working directory is.
+
+Spark keeps the classes it generates and compiles with Janino in one
+JVM-wide LRU cache, ``spark.sql.codegen.cache.maxEntries``, whose
+default is 100 entries. The engine's working set is far larger: a sweep
+of every registered query at sf0.001 compiles about 3,080 distinct
+classes, and the 18 benchmark headliners alone use about 290. At the
+default every pass evicts each class before the next pass asks for it
+again, so a warm pass recompiles nearly all of them (a second sweep:
+about 3,950 compilations), both for driver planning and for task setup
+(local tasks share the driver's cache). ``get_spark`` sets 4096
+entries, the smallest power of two above the working set; Guava splits
+that bound over 4 segments, which leaves each about 25% headroom. A
+second sweep then compiles about 75 classes. Holding the whole catalog
+costs about 22 MB of Metaspace (215 to 238 MB after two sweeps). The
+conf is static: Spark reads it once per JVM, when it compiles its first
+class, so it has to be set when the session is built.
 """
 
 from __future__ import annotations
@@ -70,6 +86,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.python.daemon.module", "mapreducegcp_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)

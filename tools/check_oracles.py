@@ -29,6 +29,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
+from mapreducegcp_spark.profile import codegen
 from mapreducegcp_spark.registry import all_queries
 from mapreducegcp_spark.session import get_spark
 from mapreducegcp_spark.sources.catalog import TABLES
@@ -126,6 +127,7 @@ def main() -> int:
         con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{src}'")
 
     n_pass = n_fail = n_skip = 0
+    compiled_before, _ = codegen(spark)
     t_sweep = time.time()
     for name in names:
         rq = qs[name]
@@ -171,8 +173,10 @@ def main() -> int:
                 print("  spark head:", srows[:3])
                 print("  duck  head:", drows[:3])
 
+    compiled = codegen(spark)[0] - compiled_before
     print(f"\n{n_pass} pass, {n_fail} fail, {n_skip} rows-only, "
-          f"{time.time() - t_sweep:.1f}s summed over the queries")
+          f"{time.time() - t_sweep:.1f}s summed over the queries, "
+          f"{compiled} classes compiled")
     return 1 if n_fail else 0
 
 
