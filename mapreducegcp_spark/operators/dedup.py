@@ -529,7 +529,7 @@ def q_dedup_minhash_lsh(
         rep_shingles = docs.select(
             "doc_id", tokens("text").alias("toks")
         ).select("doc_id", F.explode(shingles("toks")).alias("shingle"))
-    sigw = minhash_signatures(rep_shingles).cache()
+    sigw = minhash_signatures(rep_shingles).localCheckpoint(eager=False)
 
     # Narrow band table: (doc_id, band, bucket) only — the signatures do
     # NOT flow through the self-join shuffle.

@@ -29,6 +29,29 @@ def test_minhash_recall_against_exact_jaccard(spark, sf_dir):
     assert recall >= 0.8, f"LSH recall too low: {recall} ({len(exact)} exact pairs)"
 
 
+def test_minhash_lsh_leaves_no_cached_plan(spark, sf_dir):
+    """The signature table feeds both the banding self-join and the
+    estimate joins through a lazy local checkpoint, not ``.cache()``: a
+    cached plan stays registered in the session's CacheManager for the
+    session's life, outside the memo's freshness stamp. The rows still
+    strict-match the DuckDB oracle."""
+    import duckdb
+
+    from mapreducegcp_spark.registry import all_queries
+
+    spark.catalog.clearCache()
+    rq = all_queries()["dedup_minhash_lsh"]
+    got = sorted((r.doc_a, r.doc_b, r.jaccard_est) for r in rq.fn(spark, sf_dir).collect())
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
+    )
+    want = sorted(map(tuple, con.execute(rq.oracle).fetchall()))
+    assert got and got == want, (got[:10], want[:10])
+
+
 def test_simhash_close_for_similar_docs(spark, sf_dir):
     """Near-dup pairs (from exact jaccard) should have small simhash
     hamming distance, far pairs a large one, on average."""

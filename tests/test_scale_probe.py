@@ -2,9 +2,11 @@
 
 SCALE.md's 1x/10x probe table is committed prose; this file makes the
 invariant executable so a future quadratic regression FAILS a run
-instead of silently aging a document. Opt-in (slow: every probe runs
-its query at 1x and at 10x replicated volume):
+instead of silently aging a document. Opt-in (slow: every query in
+``blowup_probe.RATIO_QUERIES`` runs on the base corpus and on its
+factor-10 disk tier, which must be built first):
 
+    python tools/blowup_probe.py --build --factor 10
     RUN_SCALE_PROBE=1 python -m pytest tests/test_scale_probe.py -q
 
 The bound mirrors the probe's acceptance rule: wall clock at 10x the
@@ -18,29 +20,25 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 from pathlib import Path
 
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
-from scale_probe import PROBES, replicate  # noqa: E402
+import blowup_probe as bp  # noqa: E402
+from mapreducegcp_spark.session import sf_dir_from_env  # noqa: E402
 
 RUN = os.environ.get("RUN_SCALE_PROBE") == "1"
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+SF_DIR = sf_dir_from_env()  # the base the default tier is built from
 FACTOR = 10
 GRACE_SEC = 2.0  # absolute slack for fixed overheads on short timings
+BLOWUP_ROOT = Path(os.environ.get("BLOWUP_ROOT", "/tmp/blowup"))
+RATIO_TIER = bp.tier_dir(BLOWUP_ROOT, SF_DIR, FACTOR)
 
 slow_probe = pytest.mark.skipif(
     not RUN, reason="slow 1x/10x probe; set RUN_SCALE_PROBE=1 to run"
 )
-
-
-def _timed(df) -> float:
-    t = time.time()
-    df.write.format("noop").mode("overwrite").save()
-    return time.time() - t
 
 
 def test_blowup_permutation_preserves_word_multiset(spark):
@@ -51,8 +49,6 @@ def test_blowup_permutation_preserves_word_multiset(spark):
     replicates linearly). Not gated behind RUN_SCALE_PROBE — this is
     a cheap expression-level invariant, not a timing probe."""
     from pyspark.sql import functions as F
-
-    from blowup_probe import _PERMUTE
 
     docs = spark.createDataFrame(
         [
@@ -65,7 +61,7 @@ def test_blowup_permutation_preserves_word_multiset(spark):
     out = docs.select(
         "doc_id",
         "text",
-        F.expr(_PERMUTE).alias("permuted"),
+        F.expr(bp._PERMUTE).alias("permuted"),
     ).collect()
     changed = 0
     for r in out:
@@ -75,28 +71,73 @@ def test_blowup_permutation_preserves_word_multiset(spark):
     assert changed >= 1  # the multi-word docs actually reorder
 
 
+@pytest.mark.parametrize(
+    "sf_dir, factor, skew, tier",
+    [
+        ("data/sf0.1", 3, False, "sf0.3"),
+        ("data/sf0.1", 10, False, "sf1"),
+        ("data/sf0.1", 100, False, "sf10"),
+        ("data/sf0.01", 10, False, "sf0.1"),
+        ("data/sf0.1/", 10, True, "sf1skew"),
+    ],
+)
+def test_tier_dir_is_named_for_its_volume(sf_dir, factor, skew, tier):
+    assert bp.tier_dir("blowup", sf_dir, factor, skew) == Path("blowup", tier)
+
+
+def test_tier_dir_rejects_a_base_without_its_scale():
+    with pytest.raises(ValueError, match="sf<scale>"):
+        bp.tier_dir("blowup", "data/tpch", 10)
+
+
+def test_time_rounds_times_whole_passes_after_a_warm_pass(monkeypatch):
+    """One untimed pass per scale, then ROUNDS rounds of every query at
+    1x followed by every query at Nx; each call's seconds land in its
+    own (query, scale) cell, one value per round."""
+    calls = []
+    clock = iter(range(1, 1000))
+
+    def fake_run(fn, spark, sf_dir):
+        calls.append((fn, sf_dir))
+        return float(next(clock))
+
+    monkeypatch.setattr(bp, "_run", fake_run)
+    times = bp.time_rounds(None, {"a": "fa", "b": "fb"}, "1x", "Nx")
+
+    one_pass = [("fa", "1x"), ("fb", "1x"), ("fa", "Nx"), ("fb", "Nx")]
+    assert calls == one_pass * (1 + bp.ROUNDS)
+    rounds = range(bp.ROUNDS)
+    assert times == {
+        "a": ([5.0 + 4 * r for r in rounds], [7.0 + 4 * r for r in rounds]),
+        "b": ([6.0 + 4 * r for r in rounds], [8.0 + 4 * r for r in rounds]),
+    }
+
+
+@pytest.mark.parametrize(
+    "xs, median, iqr",
+    [
+        ([5.0, 1.0, 4.0, 2.0, 3.0], 3.0, 2.0),
+        ([1.0, 2.0, 4.0, 8.0, 16.0], 4.0, 6.0),
+        ([1.0, 2.0, 3.0, 4.0], 2.5, 1.5),  # interpolated quartiles
+    ],
+)
+def test_median_iqr(xs, median, iqr):
+    assert bp.median_iqr(xs) == pytest.approx((median, iqr))
+
+
 @slow_probe
-@pytest.mark.parametrize("name", sorted(PROBES))
+@pytest.mark.skipif(
+    not RATIO_TIER.is_dir(),
+    reason="disk blowup corpora absent; build with "
+    "tools/blowup_probe.py --build --factor 10",
+)
+@pytest.mark.parametrize("name", bp.RATIO_QUERIES)
 def test_ratio_stays_linear(spark, name):
-    import mapreducegcp_spark.sources.catalog as catalog
     from mapreducegcp_spark.registry import all_queries
 
-    q = all_queries()[name]
-    tables = PROBES[name]
-    mod = sys.modules[q.fn.__module__]
-    base_load = catalog.load_table
-
-    t1 = min(_timed(q.fn(spark, SF_DIR)) for _ in range(2))
-
-    def scaled_load(spark_, sf_dir_, table_):
-        df = base_load(spark_, sf_dir_, table_)
-        return replicate(df, tables[table_], FACTOR) if table_ in tables else df
-
-    mod.load_table = scaled_load
-    try:
-        tN = min(_timed(q.fn(spark, SF_DIR)) for _ in range(2))
-    finally:
-        mod.load_table = base_load
+    fn = all_queries()[name].fn
+    t1 = min(bp._run(fn, spark, SF_DIR) for _ in range(2))
+    tN = min(bp._run(fn, spark, str(RATIO_TIER)) for _ in range(2))
 
     limit = max(FACTOR * t1, t1 + GRACE_SEC)
     assert tN <= limit, (
@@ -105,7 +146,6 @@ def test_ratio_stays_linear(spark, name):
     )
 
 
-BLOWUP_ROOT = Path(os.environ.get("BLOWUP_ROOT", "/tmp/blowup"))
 _BLOWUP_TIERS = [
     t for t in ("sf0.3", "sf1", "sf10") if (BLOWUP_ROOT / t).is_dir()
 ]
@@ -148,13 +188,7 @@ def test_aqe_skew_split_receipt_on_zipfian_corpus(spark):
     compare is fold-order-invariant). SystemExit from the probe means
     the mitigation no longer engages or diverged — both are round-8
     regressions."""
-    import sys as _sys
-    from pathlib import Path as _Path
-
-    _sys.path.insert(0, str(_Path(__file__).resolve().parent.parent / "tools"))
-    from blowup_probe import skew_receipt
-
-    skew_receipt(spark, str(_SKEW_TIER))  # raises SystemExit on failure
+    bp.skew_receipt(spark, str(_SKEW_TIER))  # raises SystemExit on failure
 
 
 @slow_probe
@@ -173,16 +207,12 @@ def test_skew_tier_oracles_stay_exact(spark, name):
     their DuckDB oracles on the zipfian corpus (the probe's full
     10-query SKEW_VERIFY list ran green when the tier was built; this
     re-runnable subset guards the three most skew-sensitive shapes)."""
-    import sys as _sys
-    from pathlib import Path as _Path
-
-    _sys.path.insert(0, str(_Path(__file__).resolve().parent.parent / "tools"))
     import subprocess
 
     out = subprocess.run(
         [
-            _sys.executable,
-            str(_Path(__file__).resolve().parent.parent / "tools" / "check_oracles.py"),
+            sys.executable,
+            str(Path(bp.__file__).with_name("check_oracles.py")),
             "--sf-dir",
             str(_SKEW_TIER),
             name,

@@ -1,4 +1,5 @@
-"""Every import in ``tools/*.py`` and ``perfbench/*.py`` resolves.
+"""Every import in ``tools/*.py`` and ``perfbench/*.py`` resolves, and
+every query name the tools list is registered.
 
 The tools and the benchmark are scripts: an import of a deleted module
 breaks them only when they run, and no other test runs most of them.
@@ -6,7 +7,8 @@ This walks each file's AST, function-local imports included, and
 resolves every imported module with the search path those scripts set
 up for themselves (repo root, ``tools/``, ``perfbench/``). An import in
 the body of a ``try`` that catches ``ImportError`` is optional by
-design and is skipped. No Spark needed."""
+design and is skipped. No Spark needed (the query-list test imports
+the tools and the registry, which start no session)."""
 
 from __future__ import annotations
 
@@ -82,3 +84,34 @@ def test_perfbench_imports_the_oracle_normalizer(script_path):
     callable."""
     workloads = importlib.import_module("workloads")
     assert callable(workloads.normalize_fn())
+
+
+def test_tool_query_lists_name_registered_queries(script_path):
+    """Every query name the tools list is registered. A deleted or
+    renamed query otherwise leaves these lists stale, and nothing fails
+    until the tool itself runs."""
+    from mapreducegcp_spark.registry import all_queries
+
+    bp, sw, cv, wa = (
+        importlib.import_module(m)
+        for m in ("blowup_probe", "sweep100", "crossverify100", "windows_audit")
+    )
+    lists = {
+        "blowup_probe.RATIO_QUERIES": bp.RATIO_QUERIES,
+        "blowup_probe.VERIFY_100X": bp.VERIFY_100X,
+        "blowup_probe.SKEW_QUERIES": bp.SKEW_QUERIES,
+        "blowup_probe.SKEW_VERIFY": bp.SKEW_VERIFY,
+        "blowup_probe.EXCLUDE": [n for per in bp.EXCLUDE.values() for n in per],
+        "sweep100.PRE_EXCLUDED": sw.PRE_EXCLUDED,
+        "sweep100.ENGINE_AGREEMENT": sw.ENGINE_AGREEMENT,
+        "sweep100.RESTRICTION_CHECKED": sw.RESTRICTION_CHECKED,
+        "crossverify100.EXCLUDED": cv.EXCLUDED,
+        "windows_audit.ALLOWLIST": [name for name, _ in wa.ALLOWLIST],
+        **{
+            f"{m}.QUERIES": importlib.import_module(m).QUERIES
+            for m in ("retry_probe", "spill_probe", "fetchfail_probe")
+        },
+    }
+    registered = set(all_queries())
+    stale = {k: sorted(set(v) - registered) for k, v in lists.items() if set(v) - registered}
+    assert not stale, f"tool query lists name unregistered queries: {stale}"

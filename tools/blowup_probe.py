@@ -1,19 +1,14 @@
 #!/usr/bin/env python
-"""Disk-based scale blowup: materialize key-offset replicated PARQUET
-tables at 3x/10x/100x sf0.1 volume and time the benchmark's 18 catalog
-queries (``perfbench/workloads.py::CATALOG_QUERIES``) on them at 1x and
-at the blown-up volume.
+"""The scale harness: materialize key-offset replicated PARQUET tables
+at 3x/10x/100x the base corpus and time queries on them at 1x and at
+the blown-up volume.
 
-`tools/scale_probe.py` replicates IN MEMORY (a union over the same
-cached scan), which proves plan-shape linearity but exercises neither
-the scan path nor realistic shuffle byte volumes. This probe writes the
-replicated corpus to disk as multi-file parquet — so the 10x/100x runs
-pay real columnar scans (pushdown, pruning, row-group parallelism) and
-real exchange volumes, the closest a local[32] box gets to the
-100 TB posture.
+The replicated corpus is written to disk as multi-file parquet, so the
+Nx runs pay real columnar scans (pushdown, pruning, row-group
+parallelism) and real exchange volumes. Each tier's directory is named
+for its volume (``tier_dir``: sf0.1 x 10 -> ``<root>/sf1``).
 
-Replication honesty (same rules as scale_probe.py, enforced here on
-the DATA rather than per-query):
+Replication honesty, enforced on the DATA rather than per query:
 
 - Fact tables replicate with key offsets (FK edges offset together, so
   join and group cardinality grow linearly and referential integrity
@@ -38,25 +33,27 @@ the DATA rather than per-query):
   fine for per-query top-k and IVF (output linear in queries), so the
   brute-force-vs-IVF contrast below is apples-to-apples.
 
-Expected results (and what a failure looks like): on a FIXED 32-core
-box a linear plan shows t(10x) <= ~10 * t(1x) — usually much less
-while the 1x run under-utilizes cores — and t(100x)/t(10x) near 10.
-A plan hiding an O(n^2) step shows ~100x per decade: the labeled
-quadratic baseline `similarity_topk_bruteforce` is INCLUDED at 10x to
-show exactly that signature next to `similarity_ann_ivf`'s linear one,
-and excluded from the 100x tier (10,000x its 1x cost, by design).
+``--run`` times whole passes over the query list (``time_rounds``), so
+cross-query costs such as codegen-cache eviction land in the cells.
+A plan linear in its input shows t(Nx) <= ~N * t(1x) — usually much
+less while the 1x run under-utilizes cores. A plan hiding an O(n^2)
+step shows ~100x per decade: the labeled quadratic baseline
+`similarity_topk_bruteforce` is INCLUDED at 10x to show exactly that
+signature next to `similarity_ann_ivf`'s linear one, and excluded from
+the 100x tier (10,000x its 1x cost, by design).
 
     python tools/blowup_probe.py --build --factor 10
-    python tools/blowup_probe.py --run --factor 10
+    python tools/blowup_probe.py --run --factor 10            # the 18 catalog queries
+    python tools/blowup_probe.py --run --factor 10 --only 0:20  # a slice of RATIO_QUERIES
     (default root /tmp/blowup -> /tmp/blowup/sf1, /tmp/blowup/sf10)
-
-Paste the tables into SCALE.md.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import re
+import statistics
 import sys
 import time
 from pathlib import Path
@@ -65,7 +62,7 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 sys.path.insert(0, str(REPO / "perfbench"))
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from mapreducegcp_spark.session import get_spark
@@ -140,6 +137,64 @@ VERIFY_100X = [
     "window_topn_per_customer",
     "wordcount",
 ]
+
+# The 1x/Nx linearity set: every name's cost must grow at most linearly
+# with the replication factor (tests/test_scale_probe.py bounds each
+# ratio on the factor-10 tier; ``--run --only i:j`` slices it). Order
+# is fixed: SCALE.md's historical tables cite slices of it.
+#
+# Left out, because the ratio would measure the replicated data, not
+# the plan. (These reasons were written for exact in-memory copies; on
+# disk, copies > 0 are word-permuted, which trades exact copies for
+# shingle-space saturation — module doc.)
+# - dedup_minhash_lsh: replicating documents creates 10 exact copies of
+#   every text, so the (correct!) output grows quadratically in the
+#   duplicate count.
+# - multimodal_phash_near_dup, dedup_lsh_eval, dedup_simhash_eval: the
+#   same pair-graph artifact (replication manufactures quadratic
+#   duplicate pairs).
+# - interval_bucket_join: replication copies timestamps unchanged, so
+#   every purchase gains 10x followers AND there are 10x purchases —
+#   the correct output grows 100x.
+# - text_ngram_novelty: replication manufactures copies whose shingles
+#   all first-occur in the original, so the (correct!) output is zero
+#   novelty for every copy.
+RATIO_QUERIES = (
+    "wordcount", "agg_pricing_summary", "join_nation_revenue",
+    "sessionize_events", "dedup_exact", "cdc_latest_snapshot",
+    "time_weighted_avg", "funnel_view_click_purchase", "cohort_retention",
+    "merge_upsert_orders", "text_unigram_xent", "similarity_sq8_topk",
+    "join_bloom_prefilter", "agg_countmin_heavyhitters", "chunk_text_sliding",
+    "timeseries_ohlc_downsample", "asof_join_nearest",
+    "events_run_length_islands", "agg_weighted_median", "events_winsorize",
+    "pipeline_corpus_to_manifest", "basket_pair_affinity",
+    "order_global_rownum", "layout_zorder_cluster", "feature_quantile_bins",
+    "text_bigram_xent", "sample_uniform_fixed_k", "sample_fixed_k_per_group",
+    "dq_k_anonymity", "sessionize_native_window", "estimate_join_cardinality",
+    "curriculum_length_phases", "sample_temperature",
+    "similarity_knn_classify", "feature_hashing_tf", "bpe_pair_counts",
+    "window_cumulative_distinct", "dq_distribution_drift",
+    "pipeline_filter_funnel", "text_source_vocab_overlap",
+    "timeseries_monthly_growth", "layout_compaction_plan",
+    "vocab_coverage_cutoff", "bpe_train_merges", "bpe_encode_corpus",
+    "customer_rfm_segments", "mask_span_corruption", "dataset_card_stats",
+    "search_phrase_positional", "search_proximity_window",
+    "sample_neyman_allocation", "pipeline_tokenizer_dataset",
+    "dq_referential_integrity", "quality_perplexity_buckets",
+    "sample_kcenter_coreset", "multimodal_payload_dedup",
+    "bpe_fertility_stats", "timeseries_autocorrelation",
+    "timeseries_weekday_seasonal", "timeseries_theilsen_trend",
+    "search_bm25_topk", "customer_gini_coefficient", "sample_priority_ppswor",
+    "search_hybrid_rrf", "events_iqr_outliers", "agg_geometric_mean",
+    "dq_benford_first_digit", "latency_ship_weeks",
+    "embedding_top_eigenvector", "text_bigram_xent_kneser_ney",
+    "events_attribution_linear", "funnel_abandonment_window",
+    "text_langid_eval", "dedup_substring_spans",
+    "pipeline_multimodal_manifest", "text_gopher_rules", "search_mmr_rerank",
+    "sample_dsir_importance", "pipeline_token_budget_plan",
+    "sql_recursive_cte_hierarchy", "sql_udf_scalar_tvf",
+    "multimodal_png_roundtrip", "multimodal_jpeg_roundtrip",
+)
 
 # words-per-doc permutation: rank every word by xxhash64(word, doc_id)
 # — deterministic, unique per replicated row (doc_id carries the copy
@@ -250,44 +305,128 @@ def build(
         print(f"built {name}: {n} rows, {n_files} file(s), {time.time() - t0:.1f}s", flush=True)
 
 
+def tier_dir(root, sf_dir: str, factor: int, skew: bool = False) -> Path:
+    """The directory of the ``factor``x tier built from ``sf_dir``,
+    named for its volume: base ``sf<scale>`` -> ``<root>/sf<scale *
+    factor>`` (sf0.1 x 10 -> ``sf1``), with a ``skew`` suffix for the
+    zipfian tier. Raises ValueError when the base directory's name does
+    not carry its scale."""
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", Path(sf_dir).name)
+    if m is None:
+        raise ValueError(
+            f"cannot derive a tier name from base corpus {sf_dir!r}: its "
+            "directory must be named sf<scale>, e.g. sf0.1"
+        )
+    return Path(root) / f"sf{float(m.group(1)) * factor:g}{'skew' if skew else ''}"
+
+
 def _run(fn, spark: SparkSession, sf_dir: str) -> float:
-    """Seconds for one query's full plan, written to the noop sink."""
+    """Seconds for one query's full plan, written to the noop sink.
+    Includes building the plan: iterative operators (BPE trainer,
+    k-center, power iteration) run their corpus passes there."""
     t0 = time.perf_counter()
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     return time.perf_counter() - t0
 
 
+# Timed rounds per --run cell: enough for a median and an IQR.
+ROUNDS = 5
+
+
+def median_iqr(xs: list[float]) -> tuple[float, float]:
+    """Median and interquartile range (inclusive quartiles)."""
+    q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return med, q3 - q1
+
+
+def time_rounds(
+    spark: SparkSession, fns: dict, sf_dir: str, big_dir: str
+) -> dict[str, tuple[list[float], list[float]]]:
+    """One untimed warm pass over ``fns`` at each scale (a query's
+    first call costs 2-4x its later ones), then ROUNDS rounds, each a
+    timed pass over every query at 1x followed by one at Nx. Returns
+    name -> (1x seconds per round, Nx seconds per round)."""
+    for d in (sf_dir, big_dir):
+        for fn in fns.values():
+            _run(fn, spark, d)
+    times = {name: ([], []) for name in fns}
+    for _ in range(ROUNDS):
+        for side, d in enumerate((sf_dir, big_dir)):
+            for name, fn in fns.items():
+                times[name][side].append(_run(fn, spark, d))
+    return times
+
+
+def select(only: str) -> list[str]:
+    """``--only``: comma-separated query names, or an ``i:j`` slice of
+    RATIO_QUERIES."""
+    i, sep, j = only.partition(":")
+    if sep and i.isdigit() and j.isdigit():
+        return list(RATIO_QUERIES[int(i) : int(j)])
+    return [n.strip() for n in only.split(",")]
+
+
 def run(
-    spark: SparkSession, sf_dir: str, big_dir: str, factor: int, skew: bool = False
+    spark: SparkSession,
+    sf_dir: str,
+    big_dir: str,
+    factor: int,
+    skew: bool = False,
+    only: str | None = None,
 ) -> None:
-    """Time each query at 1x and at ``factor``x (best of 2, after one
-    warm-up per corpus): a markdown table, then one JSON line. The skew
-    tier times SKEW_QUERIES and adds the AQE skew-split receipt."""
+    """Time the query list at 1x and at ``factor``x (``time_rounds``):
+    a markdown table of per-cell median (IQR) and the ratio of the
+    medians, the per-round pass sums, then one JSON line with every
+    round's value. The list is ``only`` if given, else the catalog
+    headliners; the skew tier defaults to SKEW_QUERIES and adds the
+    AQE skew-split receipt."""
     from mapreducegcp_spark.registry import all_queries
     from workloads import CATALOG_QUERIES
 
     catalog = all_queries()
-    names = SKEW_QUERIES if skew else CATALOG_QUERIES
+    names = select(only) if only else (SKEW_QUERIES if skew else CATALOG_QUERIES)
+    unknown = [n for n in names if n not in catalog]
+    if unknown:
+        raise SystemExit(f"blowup_probe: not registered queries: {unknown}")
     skip = {} if skew else EXCLUDE.get(factor, {})
+    times = time_rounds(
+        spark, {n: catalog[n].fn for n in names if n not in skip}, sf_dir, big_dir
+    )
 
-    for d in (sf_dir, big_dir):
-        _run(catalog["wordcount"].fn, spark, d)
-
-    rows = {}
-    print(f"| query | t_1x (s) | t_{factor}x{'-skew' if skew else ''} (s) | ratio |")
+    tag = f"{factor}x{'-skew' if skew else ''}"
+    print(f"| query | t_1x (s) median (IQR) | t_{tag} (s) median (IQR) | ratio |")
     print("|---|---|---|---|")
+    rows = {}
     for name in names:
         if name in skip:
             print(f"| `{name}` | — | — | excluded: {skip[name]} |")
             continue
-        fn = catalog[name].fn
-        t1 = min(_run(fn, spark, sf_dir) for _ in range(2))
-        tN = min(_run(fn, spark, big_dir) for _ in range(2))
-        rows[name] = (round(t1, 2), round(tN, 2), round(tN / t1, 1))
-        print(f"| `{name}` | {t1:.2f} | {tN:.2f} | {tN / t1:.1f} |", flush=True)
+        t1, tN = times[name]
+        (m1, iqr1), (mN, iqrN) = median_iqr(t1), median_iqr(tN)
+        rows[name] = {
+            "t_1x": [round(t, 3) for t in t1],
+            f"t_{factor}x": [round(t, 3) for t in tN],
+            "ratio": round(mN / m1, 2),
+        }
+        print(f"| `{name}` | {m1:.2f} ({iqr1:.2f}) | {mN:.2f} ({iqrN:.2f}) | {mN / m1:.1f} |")
+    sums = [
+        [round(sum(t[side][r] for t in times.values()), 2) for r in range(ROUNDS)]
+        for side in (0, 1)
+    ]
+    print(f"pass sums per round (s): 1x {sums[0]}, {tag} {sums[1]}", flush=True)
     if skew:
         skew_receipt(spark, big_dir)
-    print(json.dumps({"factor": factor, "skew": skew, "rows": rows}))
+    print(
+        json.dumps(
+            {
+                "factor": factor,
+                "skew": skew,
+                "rounds": ROUNDS,
+                "pass_s": {"1x": sums[0], f"{factor}x": sums[1]},
+                "rows": rows,
+            }
+        )
+    )
 
 
 # Skew-sensitive families for the --skew --run table: the hot join key
@@ -440,13 +579,55 @@ def skew_receipt(spark: SparkSession, big_dir: str) -> None:
         raise SystemExit("skew receipt: split and unsplit outputs diverged")
 
 
+def chain_probe(spark: SparkSession, n_nodes: int = 10_000) -> None:
+    """Connected components on a PATH graph — diameter = n_nodes - 1.
+
+    Diameter-round label propagation would pay one round per hop; the
+    two-phase large-star/small-star engine converges in O(log n)
+    alternations, and the served engine (local_uf_components) either
+    contracts the path or falls back to two-phase when its boundary
+    stops shrinking. This probe is the empirical round-complexity
+    receipt for both, on the same shape."""
+    from mapreducegcp_spark.operators.dedup import (
+        local_uf_components,
+        two_phase_components,
+    )
+
+    pairs = spark.range(n_nodes - 1).select(
+        F.col("id").alias("a"), (F.col("id") + 1).alias("b")
+    )
+    for name, engine in (
+        ("two_phase_components", two_phase_components),
+        ("local_uf_components", local_uf_components),
+    ):
+        t0 = time.time()
+        roots = engine(pairs, "a", "b").agg(
+            F.countDistinct("cluster_id").alias("n_comp"),
+            F.count("*").alias("n_nodes"),
+        ).first()
+        dt = time.time() - t0
+        print(
+            f"{name}: path of {n_nodes} nodes "
+            f"(diameter {n_nodes - 1}) -> {roots['n_comp']} component, "
+            f"{roots['n_nodes']} nodes labelled, {dt:.1f}s"
+        )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--root", default="/tmp/blowup")
+    # the 3x tier exists for the exact-pair-graph family, whose cost is
+    # quadratic in the blowup factor on THIS corpus by construction
+    # (see VERIFY notes / SCALE.md)
     ap.add_argument("--factor", type=int, default=10, choices=(3, 10, 100))
     ap.add_argument("--build", action="store_true")
     ap.add_argument("--run", action="store_true")
+    ap.add_argument(
+        "--only",
+        help="with --run: comma-separated query names, or an i:j slice of "
+        "RATIO_QUERIES (default: the 18 catalog queries)",
+    )
     ap.add_argument(
         "--verify",
         action="store_true",
@@ -461,21 +642,26 @@ def main() -> None:
         "--run uses the skew-sensitive query list + the AQE skew-split "
         "receipt; --verify uses the SKEW_VERIFY oracle list",
     )
+    ap.add_argument(
+        "--chain",
+        action="store_true",
+        help="connected components on a 10,000-node path graph",
+    )
     args = ap.parse_args()
+    if not (args.build or args.run or args.verify or args.chain):
+        ap.error("nothing to do: pass --build, --run, --verify and/or --chain")
+    try:
+        out_dir = tier_dir(args.root, args.sf_dir, args.factor, args.skew)
+    except ValueError as e:
+        ap.error(str(e))
 
-    # sf0.1 * 10 = sf1, * 100 = sf10 — each tier dir is named for its volume
-    # sf0.1 * 3 = sf0.3 — the mid tier exists for the exact-pair-graph
-    # family, whose cost is quadratic in the blowup factor on THIS
-    # corpus by construction (see VERIFY notes / SCALE.md)
-    tier = {3: "sf0.3", 10: "sf1", 100: "sf10"}[args.factor]
-    if args.skew:
-        tier += "skew"
-    out_dir = Path(args.root) / tier
     spark = get_spark("blowup-probe")
     if args.build:
         build(spark, args.sf_dir, out_dir, args.factor, skew=args.skew)
     if args.run:
-        run(spark, args.sf_dir, str(out_dir), args.factor, skew=args.skew)
+        run(spark, args.sf_dir, str(out_dir), args.factor, skew=args.skew, only=args.only)
+    if args.chain:
+        chain_probe(spark)
     if args.verify:
         import subprocess
 
@@ -490,9 +676,6 @@ def main() -> None:
         )
         if rc:
             sys.exit(rc)
-    if not (args.build or args.run or args.verify):
-        print("nothing to do: pass --build, --run and/or --verify", file=sys.stderr)
-        sys.exit(2)
 
 
 if __name__ == "__main__":

@@ -66,6 +66,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blowup_probe import OFFSET  # copy 0 = id < OFFSET (tools/ is on the path)
 from mapreducegcp_spark.session import get_spark
 
 BIG = "/tmp/blowup/sf10"        # 100x uniform corpus
@@ -73,7 +74,6 @@ TENX = "/tmp/blowup/sf1"        # 10x uniform corpus
 SKEW = "/tmp/blowup/sf1skew"    # 10x zipfian corpus (verbatim cluster)
 STRAT = "/tmp/blowup/sf10strat"
 STRAT10 = "/tmp/blowup/sf1strat"
-OFFSET = 10_000_000_000         # blowup_probe key offset: copy 0 = id < OFFSET
 SAMPLE_MOD, SAMPLE_HIT = 99, 7  # 1-in-99 hash sample of replicated copies
 SAMPLE_MOD_10X = 9              # 1-in-9 at 10x -> same ~10k-doc stratum size
 
