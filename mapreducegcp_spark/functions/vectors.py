@@ -16,9 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+from mapreducegcp_spark.functions.exact import _c
 
 
 def dot(a: Column | str, b: Column | str) -> Column:
@@ -36,6 +34,19 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     d = dot(a, b)
     na, nb = l2_norm(a), l2_norm(b)
     return F.when((na > 0) & (nb > 0), d / (na * nb)).otherwise(F.lit(0.0))
+
+
+def o_dot(a: str, b: str) -> str:
+    """DuckDB oracle twin of ``dot``: the same strict left fold."""
+    return (
+        f"list_reduce(list_transform(range(1, len({a}) + 1), "
+        f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
+    )
+
+
+def o_cosine(a: str, b: str) -> str:
+    """DuckDB oracle twin of ``cosine`` for nonzero vectors."""
+    return f"({o_dot(a, b)} / (sqrt({o_dot(a, a)}) * sqrt({o_dot(b, b)})))"
 
 
 # DuckDB oracle fragments, kept in lockstep with the fold order above.

@@ -35,6 +35,7 @@ from mapreducegcp_spark.functions.exact import (
     o_sorted_list,
 )
 from mapreducegcp_spark.registry import register
+from mapreducegcp_spark.session import fork
 from mapreducegcp_spark.sources.catalog import load_table
 
 _DISC_PRICE = f"{o_dec2('l_extendedprice')} * (1 - {o_dec2('l_discount')})"
@@ -191,11 +192,12 @@ GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
 def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit grouping sets via SQL (the DataFrame API exposes only
     rollup/cube; groupingSets arrives via spark.sql)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
+    spark = fork(spark)
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
-        FROM orders_gs
+        FROM orders
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
         """
     )
@@ -414,13 +416,14 @@ def q_agg_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     as Expand + one hash aggregate), so cost is ~3x rows in, not 3
     scans. At 100 TB you'd partition the sink by day_bucket so rollup
     reads prune to the affected partitions."""
+    spark = fork(spark)
     ev = load_table(spark, sf_dir, "events").select(
         F.date_trunc("hour", "ts").alias("hour_bucket"),
         F.date_trunc("day", "ts").alias("day_bucket"),
         "event_type",
         "value",
     )
-    ev.createOrReplaceTempView("_events_buckets")
+    ev.createOrReplaceTempView("events_buckets")
     return spark.sql(
         f"""
         SELECT CASE WHEN GROUPING(hour_bucket) = 0 THEN 'hour' ELSE 'day' END
@@ -430,7 +433,7 @@ def q_agg_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ELSE '<all>' END AS event_type,
                count(*) AS n,
                CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
-        FROM _events_buckets
+        FROM events_buckets
         GROUP BY GROUPING SETS ((hour_bucket, day_bucket, event_type),
                                 (day_bucket, event_type),
                                 (day_bucket))

@@ -29,7 +29,7 @@ from pyspark.sql.window import Window
 from mapreducegcp_spark.functions.checkpoint import safe_checkpoint
 from mapreducegcp_spark.functions.memo import memo, stamp
 from mapreducegcp_spark.functions.text import TOKEN_ORACLE_EXPR, tokens
-from mapreducegcp_spark.functions.vectors import blas_pair_candidates, dot, l2_norm
+from mapreducegcp_spark.functions.vectors import blas_pair_candidates, dot, l2_norm, o_cosine
 from mapreducegcp_spark.registry import register
 from mapreducegcp_spark.sources.catalog import fan_out_scan, load_table
 
@@ -522,14 +522,21 @@ def q_dedup_minhash_lsh(
             if collapse
             else shingle_rows
         )
+        sigw = minhash_signatures(rep_shingles).localCheckpoint(eager=False)
     else:
-        docs = fan_out_scan(load_table(spark, sf_dir, "documents"), spark)
-        if collapse:
-            docs = docs.join(dup_ids, "doc_id", "left_anti")
-        rep_shingles = docs.select(
-            "doc_id", tokens("text").alias("toks")
-        ).select("doc_id", F.explode(shingles("toks")).alias("shingle"))
-    sigw = minhash_signatures(rep_shingles).localCheckpoint(eager=False)
+        # memoized like the group map: a warm call reads the checkpoint
+        def build() -> DataFrame:
+            docs = fan_out_scan(load_table(spark, sf_dir, "documents"), spark)
+            if collapse:
+                docs = docs.join(dup_ids, "doc_id", "left_anti")
+            rep_shingles = docs.select(
+                "doc_id", tokens("text").alias("toks")
+            ).select("doc_id", F.explode(shingles("toks")).alias("shingle"))
+            return minhash_signatures(rep_shingles).localCheckpoint(eager=False)
+
+        sigw = memo(
+            spark, "minhash_signatures", sf_dir, stamp(sf_dir, ("documents",)), build
+        )
 
     # Narrow band table: (doc_id, band, bucket) only — the signatures do
     # NOT flow through the self-join shuffle.
@@ -711,24 +718,11 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # near-dup pass would run at ~0.95.
 _COSINE_DUP_THRESHOLD = 0.4
 
-_DOT = (
-    "list_reduce(list_transform(range(1, len({a}) + 1), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
-)
-
-
-def _o_cosine(a: str, b: str) -> str:
-    d = _DOT.format(a=a, b=b)
-    na = _DOT.format(a=a, b=a)
-    nb = _DOT.format(a=b, b=b)
-    return f"({d} / (sqrt({na}) * sqrt({nb})))"
-
-
 _COSINE_DUP_ORACLE = f"""
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       {_o_cosine('a.embedding', 'b.embedding')} AS cos_sim
+       {o_cosine('a.embedding', 'b.embedding')} AS cos_sim
 FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE {_o_cosine('a.embedding', 'b.embedding')} >= {_COSINE_DUP_THRESHOLD}
+WHERE {o_cosine('a.embedding', 'b.embedding')} >= {_COSINE_DUP_THRESHOLD}
 """
 
 

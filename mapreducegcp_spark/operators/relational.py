@@ -20,6 +20,7 @@ from pyspark.sql.window import Window
 from mapreducegcp_spark.functions.exact import dec2, dsum, o_dec2, o_dsum
 from mapreducegcp_spark.functions.memo import memo, stamp
 from mapreducegcp_spark.registry import register
+from mapreducegcp_spark.session import fork
 from mapreducegcp_spark.sources.catalog import load_table
 
 
@@ -485,6 +486,7 @@ def q_join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-rank formulation produces (partition by custkey, rank,
     filter <= 2) — one custkey shuffle, no nested-loop per row. The
     deterministic ORDER BY tie-break keeps the row set hash-stable."""
+    spark = fork(spark)
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
@@ -1362,66 +1364,34 @@ def q_sql_recursive_cte_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame
     so the default aborts around 1M customers+suppliers
     (RECURSION_ROW_LIMIT_EXCEEDED at the 100x corpus, 16M nodes).
     The level limit is the right runaway guard for a fixed-depth
-    hierarchy; raise the row cap so output size is bounded by the
-    data, not a constant.
-
-    The conf mutation is session-wide and cannot be bracketed around
-    execution (the returned DataFrame runs lazily, after this function
-    exits), so instead of removing the guard with a huge constant the
-    cap is SIZED FROM THE DATA: a 3-level walk emits at most one row
-    per entity, so 2x the node count (+slack for the seed level)
-    bounds this query while remaining a meaningful runaway guard for
-    every later WITH RECURSIVE in the session (dedup.py recursive
-    cluster resolution), where row blowup is data-dependent. Two
-    session-hygiene rules (round 10): the node count is CACHED per
-    (session, corpus) — repeat invocations (bench min-of-N, repeated
-    driver checks) run zero extra count() jobs — and the cap is
-    MONOTONE: never lowered below what an earlier, larger corpus in
-    the same session established, so whether a later recursion trips
-    RECURSION_ROW_LIMIT_EXCEEDED cannot depend on this query having
-    run on a small corpus in between.
-
-    Why NOT per-query scoping (set before, restore after — round-10
-    ADVICE): the cap is read at EXECUTION time, not build time
-    (measured: a recursion built under a generous cap fails with
-    RECURSION_ROW_LIMIT_EXCEEDED when the conf is tightened before its
-    action runs — pinned by
-    test_recursion_cap_binds_at_execution_not_build). Restoring the
-    conf after this builder returns would therefore re-tighten the cap
-    under every not-yet-executed recursive DataFrame, reintroducing
-    exactly the build-order dependence the monotone rule removed. The
-    looser session guard is the accepted cost: it still bounds runaway
-    recursion at ~2x the largest corpus's node count, and the level
-    cap stays the primary guard for fixed-depth walks."""
-    for t in ("region", "nation", "supplier", "customer"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"{t}_rc")
+    hierarchy, so the row cap is SIZED FROM THE DATA: 2x the node
+    count (+slack for the seed level), set on this builder's fork
+    (session.py). The cap is read when the recursion executes, and
+    the returned DataFrame executes under its fork's conf, so the
+    caller's cap neither changes nor applies. The node count is
+    memoized per corpus, so repeat calls run no count() job."""
     n_nodes = _hierarchy_node_count(spark, sf_dir)
-    try:
-        current = int(spark.conf.get("spark.sql.cteRecursionRowLimit"))
-    except Exception:
-        current = 1_000_000
-    spark.conf.set(
-        "spark.sql.cteRecursionRowLimit",
-        str(max(2 * n_nodes + 1_000, 1_000_000, current)),
-    )
+    spark = fork(spark, {"spark.sql.cteRecursionRowLimit": str(2 * n_nodes + 1_000)})
+    for t in ("region", "nation", "supplier", "customer"):
+        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(
         """
         WITH RECURSIVE edges AS (
           SELECT 'R' || CAST(n_regionkey AS STRING) AS parent,
                  'N' || CAST(n_nationkey AS STRING) AS child
-          FROM nation_rc
+          FROM nation
           UNION ALL
           SELECT 'N' || CAST(s_nationkey AS STRING), 'S' || CAST(s_suppkey AS STRING)
-          FROM supplier_rc
+          FROM supplier
           UNION ALL
           SELECT 'N' || CAST(c_nationkey AS STRING), 'C' || CAST(c_custkey AS STRING)
-          FROM customer_rc
+          FROM customer
         ),
         h AS (
           SELECT 'R' || CAST(r_regionkey AS STRING) AS node,
                  r_name AS root_region,
                  CAST(0 AS BIGINT) AS depth
-          FROM region_rc
+          FROM region
           UNION ALL
           SELECT e.child, h.root_region, h.depth + 1
           FROM edges e JOIN h ON e.parent = h.node
@@ -1475,7 +1445,8 @@ def q_sql_udf_scalar_tvf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Worker/Worker.py:68-78); SQL UDFs are the declarative counterpart
     where the user logic itself becomes plannable. Scale: inlined
     expressions — zero cost beyond the underlying scan/rollup."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_udf")
+    spark = fork(spark)
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     spark.sql(
         """
         CREATE OR REPLACE TEMPORARY FUNCTION price_band(p DOUBLE)
@@ -1510,7 +1481,7 @@ def q_sql_udf_scalar_tvf(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (SELECT price_band(o_totalprice) AS band,
                      status_band(o_orderstatus, o_totalprice) AS status_band,
                      o_totalprice
-              FROM orders_udf) b
+              FROM orders) b
         JOIN band_ranks() r ON b.band = r.band
         GROUP BY b.band, r.band_rank
         """

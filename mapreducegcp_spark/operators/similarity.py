@@ -33,7 +33,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mapreducegcp_spark.functions.memo import artifact, memo, stamp
-from mapreducegcp_spark.functions.vectors import blas_pair_candidates, cosine, dot, l2_norm
+from mapreducegcp_spark.functions.vectors import (
+    blas_pair_candidates, cosine, dot, l2_norm, o_cosine, o_dot,
+)
 from mapreducegcp_spark.registry import register
 from mapreducegcp_spark.sources.catalog import load_table
 
@@ -41,29 +43,16 @@ from mapreducegcp_spark.sources.catalog import load_table
 _QUERY_IDS = (0, 1, 2, 3, 4)
 _TOP_K = 10
 
-_DOT = (
-    "list_reduce(list_transform(range(1, len({a}) + 1), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
-)
-
-
-def _o_cosine(a: str, b: str) -> str:
-    d = _DOT.format(a=a, b=b)
-    na = _DOT.format(a=a, b=a)
-    nb = _DOT.format(a=b, b=b)
-    return f"({d} / (sqrt({na}) * sqrt({nb})))"
-
-
 _IDS_SQL = ", ".join(str(i) for i in _QUERY_IDS)
 
 _TOPK_ORACLE = f"""
 SELECT query_id, vec_id, cos_sim, rn AS rank
 FROM (
   SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-         {_o_cosine('q.embedding', 'c.embedding')} AS cos_sim,
+         {o_cosine('q.embedding', 'c.embedding')} AS cos_sim,
          ROW_NUMBER() OVER (
            PARTITION BY q.vec_id
-           ORDER BY {_o_cosine('q.embedding', 'c.embedding')} DESC, c.vec_id
+           ORDER BY {o_cosine('q.embedding', 'c.embedding')} DESC, c.vec_id
          ) AS rn
   FROM embeddings q JOIN embeddings c ON c.vec_id NOT IN ({_IDS_SQL})
   WHERE q.vec_id IN ({_IDS_SQL})
@@ -123,12 +112,12 @@ _RANGE_TAU = 0.25  # cosine radius: ~55 in-range rows at sf0.01
 # the same predicate the engine runs).
 _RANGE_ORACLE = f"""
 SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       {_o_cosine('q.embedding', 'c.embedding')} AS cos_sim
+       {o_cosine('q.embedding', 'c.embedding')} AS cos_sim
 FROM embeddings q JOIN embeddings c ON c.vec_id NOT IN ({_IDS_SQL})
 WHERE q.vec_id IN ({_IDS_SQL})
-  AND {_DOT.format(a='q.embedding', b='q.embedding')} > 0
-  AND {_DOT.format(a='c.embedding', b='c.embedding')} > 0
-  AND {_o_cosine('q.embedding', 'c.embedding')} >= {_RANGE_TAU}
+  AND {o_dot('q.embedding', 'q.embedding')} > 0
+  AND {o_dot('c.embedding', 'c.embedding')} > 0
+  AND {o_cosine('q.embedding', 'c.embedding')} >= {_RANGE_TAU}
 """
 
 
@@ -176,10 +165,10 @@ _NN_ORACLE = f"""
 SELECT vec_a, vec_b, cos_sim
 FROM (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         {_o_cosine('a.embedding', 'b.embedding')} AS cos_sim,
+         {o_cosine('a.embedding', 'b.embedding')} AS cos_sim,
          ROW_NUMBER() OVER (
            PARTITION BY a.vec_id
-           ORDER BY {_o_cosine('a.embedding', 'b.embedding')} DESC, b.vec_id
+           ORDER BY {o_cosine('a.embedding', 'b.embedding')} DESC, b.vec_id
          ) AS rn
   FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
 )
@@ -901,10 +890,10 @@ cand AS (
 SELECT query_id, vec_id, cos_sim, rn AS rank
 FROM (
   SELECT query_id, vec_id,
-         {_o_cosine('q_emb', 'c_emb')} AS cos_sim,
+         {o_cosine('q_emb', 'c_emb')} AS cos_sim,
          ROW_NUMBER() OVER (
            PARTITION BY query_id
-           ORDER BY {_o_cosine('q_emb', 'c_emb')} DESC, vec_id
+           ORDER BY {o_cosine('q_emb', 'c_emb')} DESC, vec_id
          ) AS rn
   FROM cand WHERE arn <= {_SQ8_CAND}
 )
@@ -1053,10 +1042,10 @@ _HARDNEG_ORACLE = f"""
 SELECT query_id, vec_id, cos_sim, rn AS rank
 FROM (
   SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-         {_o_cosine('q.embedding', 'c.embedding')} AS cos_sim,
+         {o_cosine('q.embedding', 'c.embedding')} AS cos_sim,
          ROW_NUMBER() OVER (
            PARTITION BY q.vec_id
-           ORDER BY {_o_cosine('q.embedding', 'c.embedding')} DESC, c.vec_id
+           ORDER BY {o_cosine('q.embedding', 'c.embedding')} DESC, c.vec_id
          ) AS rn
   FROM embeddings q JOIN embeddings c
     ON c.vec_id NOT IN ({_IDS_SQL}) AND c.label <> q.label
@@ -1877,10 +1866,10 @@ def _mmr_oracle() -> str:
         f"""cand AS MATERIALIZED (
   SELECT query_id, vec_id, embedding, rel, rn FROM (
     SELECT q.vec_id AS query_id, c.vec_id, c.embedding,
-           {_o_cosine('q.embedding', 'c.embedding')} AS rel,
+           {o_cosine('q.embedding', 'c.embedding')} AS rel,
            ROW_NUMBER() OVER (
              PARTITION BY q.vec_id
-             ORDER BY {_o_cosine('q.embedding', 'c.embedding')} DESC, c.vec_id
+             ORDER BY {o_cosine('q.embedding', 'c.embedding')} DESC, c.vec_id
            ) AS rn
     FROM embeddings q JOIN embeddings c ON c.vec_id NOT IN ({_IDS_SQL})
     WHERE q.vec_id IN ({_IDS_SQL}))
@@ -1892,7 +1881,7 @@ s1 AS MATERIALIZED (
 ),
 d1 AS MATERIALIZED (
   SELECT c.query_id, c.vec_id, c.embedding, c.rel,
-         {_o_cosine('c.embedding', 's.embedding')} AS pen
+         {o_cosine('c.embedding', 's.embedding')} AS pen
   FROM cand c JOIN s1 s USING (query_id) WHERE c.vec_id <> s.vec_id
 )"""
     ]
@@ -1911,7 +1900,7 @@ d1 AS MATERIALIZED (
         if r < _MMR_K:
             parts.append(f"""d{r} AS MATERIALIZED (
   SELECT d.query_id, d.vec_id, d.embedding, d.rel,
-         greatest(d.pen, {_o_cosine('d.embedding', 's.embedding')}) AS pen
+         greatest(d.pen, {o_cosine('d.embedding', 's.embedding')}) AS pen
   FROM d{p} d JOIN s{r} s USING (query_id) WHERE d.vec_id <> s.vec_id
 )""")
     rows = [

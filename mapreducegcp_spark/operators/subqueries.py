@@ -21,12 +21,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 from mapreducegcp_spark.functions.exact import o_dec2, o_dsum
 from mapreducegcp_spark.registry import register
+from mapreducegcp_spark.session import fork
 from mapreducegcp_spark.sources.catalog import load_table
 
 
-def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
+def _views(spark: SparkSession, sf_dir: str, *names: str) -> SparkSession:
+    """A fork (session.py) holding the named tables as temp views."""
+    spark = fork(spark)
     for n in names:
         load_table(spark, sf_dir, n).createOrReplaceTempView(n)
+    return spark
 
 
 _EXISTS_SQL = """
@@ -45,8 +49,7 @@ def q_subquery_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXISTS subquery (TPC-H Q4 shape): orders having at least one
     high-quantity line, counted per priority. Catalyst rewrites the
     EXISTS to a left-semi hash join on l_orderkey."""
-    _views(spark, sf_dir, "orders", "lineitem")
-    return spark.sql(_EXISTS_SQL)
+    return _views(spark, sf_dir, "orders", "lineitem").sql(_EXISTS_SQL)
 
 
 _NOT_EXISTS_SQL = """
@@ -65,8 +68,7 @@ def q_subquery_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT EXISTS: customers with no big-ticket order, per segment —
     rewritten to a left-anti join (null-safe, unlike NOT IN with
     nullable keys); the price filter pushes into the orders scan."""
-    _views(spark, sf_dir, "customer", "orders")
-    return spark.sql(_NOT_EXISTS_SQL)
+    return _views(spark, sf_dir, "customer", "orders").sql(_NOT_EXISTS_SQL)
 
 
 _IN_SQL = """
@@ -84,8 +86,7 @@ def q_subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN subquery: brands of parts that appear on returned lines —
     semi join keyed on partkey; the returnflag filter pushes into the
     lineitem scan before the exchange."""
-    _views(spark, sf_dir, "part", "lineitem")
-    return spark.sql(_IN_SQL)
+    return _views(spark, sf_dir, "part", "lineitem").sql(_IN_SQL)
 
 
 _SCALAR_CORR_SQL = f"""
@@ -146,8 +147,7 @@ def q_subquery_scalar_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged oracle hash. The comparison avg goes through the
     decimal-exact convention (functions/exact.py), so the filter
     boundary is order-independent and hash-stable across engines."""
-    _views(spark, sf_dir, "lineitem")
-    return spark.sql(_SCALAR_CORR_WINDOW_SQL)
+    return _views(spark, sf_dir, "lineitem").sql(_SCALAR_CORR_WINDOW_SQL)
 
 
 _SCALAR_UNCORR_SQL = f"""
@@ -167,5 +167,4 @@ def q_subquery_scalar_uncorrelated(spark: SparkSession, sf_dir: str) -> DataFram
     scan's filter — no join shuffle at all. The average goes through
     the decimal-exact convention (functions/exact.py), so the cut line
     is bit-identical in both engines."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_SCALAR_UNCORR_SQL)
+    return _views(spark, sf_dir, "orders").sql(_SCALAR_UNCORR_SQL)

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from mapreducegcp_spark.registry import register
+from mapreducegcp_spark.session import fork
 from mapreducegcp_spark.sources.catalog import load_table
 
 _SENTENCES_ORACLE = """
@@ -64,6 +65,7 @@ def q_udtf_split_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's mapper fan-out contract as a declared table
     function. Whitespace trim + empty drop mirror the oracle exactly,
     so the row multiset hash-matches despite the Python row path."""
+    spark = fork(spark)
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     spark.udtf.register("split_sentences", make_sentence_udtf())
     return spark.sql(
@@ -127,10 +129,10 @@ def q_udtf_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries the two projected columns, and state per instance is four
     scalars — but prefer real aggregates when the logic fits them
     (they combine map-side; a UDTF cannot)."""
-    docs = load_table(spark, sf_dir, "documents").select("lang", "n_chars")
+    spark = fork(spark)
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     spark.udtf.register("lang_stats_udtf", make_lang_stats_udtf())
-    docs.createOrReplaceTempView("udtf_lang_stats_src")
     return spark.sql(
         "SELECT * FROM lang_stats_udtf("
-        "TABLE(SELECT lang, n_chars FROM udtf_lang_stats_src) PARTITION BY lang)"
+        "TABLE(SELECT lang, n_chars FROM documents) PARTITION BY lang)"
     )

@@ -28,7 +28,8 @@ re-expressed Spark-first:
   ``json.dumps``-able, SURVEY.md §1.2).
 - the shuffle (``intermediateCombiner``, Master/Master.py:130-163 —
   single-threaded through the master) is Catalyst's Exchange;
-  ``numberOfReducers`` becomes ``spark.sql.shuffle.partitions``.
+  ``numberOfReducers`` becomes ``spark.sql.shuffle.partitions`` on the
+  job's own fork of the session (session.py).
 - the JSON gather/sink (``combineAndStoreReducerOutput``,
   Master/Master.py:97-108) is ``df.write.json`` plus a merged-dict
   return value. The reference returns a JSON array with one dict per
@@ -56,6 +57,7 @@ from pyspark.sql import functions as F
 
 from mapreducegcp_spark.operators.inverted_index import inverted_index
 from mapreducegcp_spark.operators.wordcount import word_count
+from mapreducegcp_spark.session import fork
 from mapreducegcp_spark.sources.catalog import (
     docs_from_dir,
     docs_from_file,
@@ -75,12 +77,6 @@ class _Application:
     builtin: str | None = None  # name of a declarative plan
 
 
-@dataclass
-class _Job:
-    n_mappers: int
-    n_reducers: int
-
-
 class UnknownJobError(KeyError):
     """Raised when ``run_mapred`` is handed a job id that was never
     minted or was already destroyed — the typed form of the contract
@@ -94,7 +90,7 @@ class MapReduceEngine:
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self._jobs: dict[str, _Job] = {}
+        self._jobs: dict[str, SparkSession] = {}  # job handle -> its fork
         self._apps: dict[str, _Application] = {
             # functionMap parity (Worker/Worker.py:69-78): both built-in
             # applications, addressed by their reference mapper/reducer
@@ -107,9 +103,11 @@ class MapReduceEngine:
 
     def init_cluster(self, number_of_mappers: int, number_of_reducers: int) -> str:
         """Mint a job handle. Mapper count is advisory (scan splits rule);
-        reducer count sets the job's shuffle partitioning."""
+        reducer count sets the shuffle partitioning of the job's fork."""
         uid = str(uuid.uuid4())
-        self._jobs[uid] = _Job(number_of_mappers, number_of_reducers)
+        self._jobs[uid] = fork(
+            self.spark, {"spark.sql.shuffle.partitions": str(number_of_reducers)}
+        )
         return uid
 
     def destroy_cluster(self, unique_id: str) -> None:
@@ -164,32 +162,27 @@ class MapReduceEngine:
         the same app, as in the reference where the pair selects one
         logical application).
         """
-        job = self._jobs.get(unique_id)
-        if job is None:
+        session = self._jobs.get(unique_id)
+        if session is None:
             raise UnknownJobError(
                 f"unknown job id {unique_id!r}; call init_cluster first"
             )
-        docs = self._classify_input(input_path)
+        docs = self._classify_input(session, input_path)
         app = self._resolve_app(map_function, reduce_function)
 
-        prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(job.n_reducers))
-        try:
-            if app.builtin == "wordcount":
-                result_df = word_count(docs)
-                payload = {r["word"]: r["cnt"] for r in result_df.toLocalIterator()}
-            elif app.builtin == "inverted_index":
-                result_df = inverted_index(docs, doc_col="filename")
-                payload: dict[str, dict[str, int]] = {}
-                for r in result_df.toLocalIterator():
-                    payload.setdefault(r["word"], {})[r["filename"]] = r["cnt"]
-            else:
-                result_df = self._generic_mapred(docs, app)
-                payload = {
-                    r["key"]: json.loads(r["value"]) for r in result_df.toLocalIterator()
-                }
-        finally:
-            self.spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if app.builtin == "wordcount":
+            result_df = word_count(docs)
+            payload = {r["word"]: r["cnt"] for r in result_df.toLocalIterator()}
+        elif app.builtin == "inverted_index":
+            result_df = inverted_index(docs, doc_col="filename")
+            payload: dict[str, dict[str, int]] = {}
+            for r in result_df.toLocalIterator():
+                payload.setdefault(r["word"], {})[r["filename"]] = r["cnt"]
+        else:
+            result_df = self._generic_mapred(docs, app)
+            payload = {
+                r["key"]: json.loads(r["value"]) for r in result_df.toLocalIterator()
+            }
 
         out = json.dumps(payload, sort_keys=True)
         if output_path:
@@ -199,14 +192,15 @@ class MapReduceEngine:
 
     # -- internals -------------------------------------------------------
 
-    def _classify_input(self, input_path: str) -> DataFrame:
+    @staticmethod
+    def _classify_input(spark: SparkSession, input_path: str) -> DataFrame:
         """dir / file / literal-string classification, exactly the
         reference's branch order (Master/Master.py:195,217,222)."""
         if os.path.isdir(input_path):
-            return docs_from_dir(self.spark, input_path)
+            return docs_from_dir(spark, input_path)
         if os.path.isfile(input_path):
-            return docs_from_file(self.spark, input_path)
-        return docs_from_string(self.spark, input_path)
+            return docs_from_file(spark, input_path)
+        return docs_from_string(spark, input_path)
 
     def _resolve_app(self, map_function: str, reduce_function: str) -> _Application:
         for name in (map_function, reduce_function):

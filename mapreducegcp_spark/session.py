@@ -1,9 +1,24 @@
 """SparkSession construction.
 
 Replaces the reference's cluster lifecycle (``init_cluster`` /
-``destroy_cluster``, Master/Master.py:25-58,17-21): one SparkSession is
-the job handle; ``spark.sql.shuffle.partitions`` plays the role of
-``numberOfReducers``.
+``destroy_cluster``, Master/Master.py:25-58,17-21): one SparkContext
+runs every job, and each job gets its own handle, a ``fork`` of the
+caller's session whose ``spark.sql.shuffle.partitions`` plays the role
+of ``numberOfReducers``.
+
+The fork rule: a builder never writes the session it is handed. The
+runtime confs, temp views, UDFs, UDTFs and Python data sources a
+builder (or a ``run_mapred`` job) needs for itself go on
+``fork(spark, conf)``, so queries sharing one session never see each
+other's settings or names. The fork is ``cloneSession``, not
+``newSession``: it starts with the caller's runtime confs (a RocksDB
+state-store provider, a timezone), views and functions, and shares the
+SparkContext, the CacheManager, the memo and the generated-class cache,
+for a few milliseconds. A DataFrame runs under its own session's conf,
+also when the action comes after the builder returned. The schema probe
+(sources/catalog.py::table_schema) runs on a fork with the two
+parquet-timestamp confs below, so no caller's session needs them;
+``get_spark`` still sets both for ad-hoc reads.
 
 Scale posture: these defaults target local[N] testing but are written so
 the same code runs on a real cluster — AQE handles runtime partition
@@ -113,3 +128,13 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def fork(spark: SparkSession, conf: dict[str, str] | None = None) -> SparkSession:
+    """A child of ``spark`` with ``conf`` applied (the fork rule above):
+    it sees the caller's confs, views and functions, and what it writes
+    stays in it."""
+    child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    for k, v in (conf or {}).items():
+        child.conf.set(k, v)
+    return child

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from mapreducegcp_spark.functions.memo import memo, stamp
+from mapreducegcp_spark.session import fork
 
 TABLES = (
     "region",
@@ -40,47 +41,43 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one of the driver's parquet tables from a scale-factor dir.
 
     ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark's vectorized
-    reader rejects outright; it is read as a raw long (legacy
-    ``nanosAsLong``) and truncated to microseconds with integer
-    arithmetic — the same truncation DuckDB applies, so timestamps stay
-    oracle-comparable.
+    reader rejects outright; it is read as a raw long and truncated to
+    microseconds with integer arithmetic — the same truncation DuckDB
+    applies, so timestamps stay oracle-comparable.
 
-    The file's schema comes from ``table_schema``, probed after the two
-    conf sets below, so a warm read launches no schema-inference job.
-    A file rewritten in place gets a new stamp and is probed again.
+    The read takes its schema from ``table_schema``, so a warm read
+    launches no schema-inference job and the caller's session needs
+    neither timestamp conf (session.py, the fork rule). A file
+    rewritten in place gets a new stamp and is probed again.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Naive parquet TIMESTAMP(MICROS) must read as a session-TZ (UTC)
-    # TIMESTAMP, not TIMESTAMP_NTZ: the engine's time arithmetic
-    # (unix_micros, window ranges) and the DuckDB oracle both treat
-    # naive storage as UTC instants. Set here (runtime SQL conf), not
-    # only in session.py, because callers may hand in their own session
-    # (the driver does).
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.schema(table_schema(spark, path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # integer div (not double /): a double round-trip can round a
         # ...999 nanos tail up and disagree with true floor division.
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # Belt-and-braces: if an upstream reader still produced NTZ (conf
-    # flipped after a cached plan, a future default change), normalize.
-    for col, dtype in df.dtypes:
-        if dtype == "timestamp_ntz":
-            df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
+
+
+# The probe's confs: TIMESTAMP(NANOS) infers as a raw long, and naive
+# TIMESTAMP(MICROS) as a UTC TIMESTAMP, not TIMESTAMP_NTZ — the engine's
+# time arithmetic and the DuckDB oracle treat naive storage as UTC.
+_PROBE_CONF = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
 
 
 def table_schema(spark: SparkSession, path: str) -> StructType:
     """Schema of the parquet table at ``path``, memoized per file
-    (functions/memo.py). Inferring it launches one Spark job per read;
-    batch and stream readers of a table share this one probe."""
+    (functions/memo.py) and probed on a fork with ``_PROBE_CONF``.
+    Inferring it launches one Spark job per read; batch and stream
+    readers of a table share this one probe."""
     return memo(
         spark, "parquet_schema", path, stamp(path),
-        lambda: spark.read.parquet(path).schema,
+        lambda: fork(spark, _PROBE_CONF).read.parquet(path).schema,
     )
 
 
@@ -115,9 +112,11 @@ def docs_from_file(spark: SparkSession, path: str) -> DataFrame:
 def docs_from_string(spark: SparkSession, data: str) -> DataFrame:
     """A literal string as the corpus, filename ``InputString``.
 
-    Reference: the else branch (Master/Master.py:222-224).
+    Reference: the else branch (Master/Master.py:222-224). Built with a
+    query parameter, not ``createDataFrame``, which would leave ``spark``
+    (a ``run_mapred`` job's fork) as the thread's active session.
     """
-    return spark.createDataFrame([("InputString", data)], "filename string, text string")
+    return spark.sql("SELECT 'InputString' AS filename, :text AS text", args={"text": data})
 
 
 def fan_out_scan(df: DataFrame, spark: SparkSession) -> DataFrame:

@@ -26,6 +26,7 @@ from pyspark.sql.datasource import (
 )
 
 from mapreducegcp_spark.registry import register
+from mapreducegcp_spark.session import fork
 
 _LCG_A = 1103515245
 _LCG_C = 12345
@@ -112,6 +113,7 @@ def q_source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each InputPartition is an independent task; a real service-
     backed source shards by key range or shard id the same way. Rows
     stream from Python via Arrow batches — no driver materialization."""
+    spark = fork(spark)
     spark.dataSource.register(make_synthetic_rows_source())
     df = (
         spark.read.format("synthetic_rows")
@@ -197,8 +199,9 @@ def q_source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the custom streaming connector path, value-hash-checked against
     the batch derivation once the stream drains. Offsets advance per
     micro-batch exactly as a queue consumer would commit them."""
-    from mapreducegcp_spark.streaming.events import run_to_memory
+    from mapreducegcp_spark.streaming.events import run_to_memory, stream_session
 
+    spark = stream_session(spark)
     spark.dataSource.register(make_synthetic_stream_source())
     sdf = spark.readStream.format("synthetic_stream").load()
     agg = sdf.groupBy("bucket").agg(
@@ -279,6 +282,7 @@ def q_sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mapreducegcp_spark.sources.catalog import load_table
 
+    spark = fork(spark)
     spark.dataSource.register(make_jsonl_sink_source())
     agg = (
         load_table(spark, sf_dir, "events")
@@ -291,11 +295,20 @@ def q_sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
     out = f"/tmp/mapreducegcp_spark_jsonl_sink/{sf_tag}"
     shutil.rmtree(out, ignore_errors=True)
-    # coalesce(1): the aggregate is a handful of rows, but each write
-    # partition spins up a Python worker for the sink — 32 empty-ish
-    # tasks cost ~2s of pure startup (measured). Size the write
-    # parallelism to the DATA; a corpus-sized write keeps full width.
-    agg.coalesce(1).write.format("jsonl_sink").option("path", out).mode("append").save()
+    # The writer resolves the format name in the thread's ACTIVE session
+    # (and plans the write in the frame's), so the fork is active for
+    # the write only.
+    jsession = SparkSession._get_j_spark_session_class(spark._jvm)
+    active = jsession.getActiveSession()
+    jsession.setActiveSession(spark._jsparkSession)
+    try:
+        # coalesce(1): the aggregate is a handful of rows, but each write
+        # partition spins up a Python worker for the sink — 32 empty-ish
+        # tasks cost ~2s of pure startup (measured). Size the write
+        # parallelism to the DATA; a corpus-sized write keeps full width.
+        agg.coalesce(1).write.format("jsonl_sink").option("path", out).mode("append").save()
+    finally:
+        jsession.setActiveSession(active.get() if active.isDefined() else None)
     return spark.read.schema("event_type string, n bigint, total_cents bigint").json(
         out
     )

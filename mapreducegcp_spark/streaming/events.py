@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from mapreducegcp_spark.functions.exact import dsum, o_dec2, o_dsum
 from mapreducegcp_spark.registry import register
+from mapreducegcp_spark.session import fork
 from mapreducegcp_spark.sources.catalog import load_table, table_schema
 
 WATERMARK_DELAY = "10 minutes"
@@ -69,22 +70,18 @@ def _table_stream(spark: SparkSession, sf_dir: str, leaf: str, schema) -> DataFr
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events table as a streaming DataFrame (file-source replay).
+    """The events table as a streaming DataFrame (file-source replay),
+    built on ``stream_session(spark)``.
 
     Same nanos-timestamp handling as the batch path
     (sources/catalog.py): the file source needs an explicit schema, so
-    reuse the batch reader's (ts as raw long under the legacy nanos
-    conf), then truncate to micros with integer arithmetic.
+    reuse the batch reader's (ts as raw long), then truncate to micros
+    with integer arithmetic. The caller's session needs neither
+    timestamp conf (session.py, the fork rule).
     """
+    spark = stream_session(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Same rationale as sources/catalog.py: naive TIMESTAMP(MICROS)
-    # storage must read as a session-TZ timestamp, not TIMESTAMP_NTZ —
-    # set here too because the schema probe below bypasses load_table
-    # and the caller's session (the driver's) may not have it set.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    raw_schema = table_schema(spark, path)
-    sdf = _table_stream(spark, sf_dir, "events.parquet", raw_schema)
+    sdf = _table_stream(spark, sf_dir, "events.parquet", table_schema(spark, path))
     if dict(sdf.dtypes).get("ts") == "bigint":
         sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return sdf
@@ -93,9 +90,10 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 STREAM_SHUFFLE_PARTITIONS = 8
 
 
-class stream_partitions:
-    """Temporarily size ``spark.sql.shuffle.partitions`` for stateful
-    streaming.
+def stream_session(spark: SparkSession) -> SparkSession:
+    """The fork (session.py) a stream is built on, with at most
+    ``STREAM_SHUFFLE_PARTITIONS`` shuffle partitions; its memory-sink
+    views stay in it.
 
     Every stateful operator materializes one state store per shuffle
     partition per micro-batch; at core-count partitions (32 here) the
@@ -103,21 +101,11 @@ class stream_partitions:
     on the stream-stream join at sf0.1 (8.9s -> 2.2s). Production
     sizing tracks state volume / key cardinality, not core count, and
     is fixed at the FIRST checkpoint of a query's life; these replay
-    harness queries start fresh each call, so a scoped override is
-    safe and results are partition-independent either way.
+    harness queries start fresh each call, and results are
+    partition-independent either way.
     """
-
-    def __init__(self, spark: SparkSession, n: int = STREAM_SHUFFLE_PARTITIONS):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions", str(min(self.n, int(self.prev)))
-        )
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
+    n = min(STREAM_SHUFFLE_PARTITIONS, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    return fork(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
 # Progress of the most recent run_to_memory query, for tests and scale
@@ -177,26 +165,29 @@ def run_to_memory(df: DataFrame, mode: str) -> DataFrame:
     name = f"mem_{uuid4().hex[:12]}"
     ckpt = _ephemeral_checkpoint(df.sparkSession, name)
     try:
-        with stream_partitions(df.sparkSession):
-            q = (
-                df.writeStream.format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .outputMode(mode)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                LAST_PROGRESS.clear()
-                if q.lastProgress:
-                    LAST_PROGRESS.update(q.lastProgress)
-                q.stop()
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .outputMode(mode)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            LAST_PROGRESS.clear()
+            if q.lastProgress:
+                LAST_PROGRESS.update(q.lastProgress)
+            q.stop()
     finally:
         # also when start() or stop() raises: Spark may already have
         # created the directory
         shutil.rmtree(ckpt, ignore_errors=True)
-    return df.sparkSession.table(name)
+    # The returned frame holds the resolved sink plan, so the view can
+    # go: the sink's rows then live only as long as that frame.
+    sink = df.sparkSession.table(name)
+    df.sparkSession.catalog.dropTempView(name)
+    return sink
 
 
 @register(
@@ -471,10 +462,12 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is sharded by the equi-key (user_id) across
     executors; the interval predicate is what permits state eviction —
-    an unbounded-time stream-stream join would grow state forever."""
+    an unbounded-time stream-stream join would grow state forever.
+    Both sides replay one events stream (one fork); Spark gives each
+    side of the self-join its own file source."""
+    events = events_stream(spark, sf_dir)
     clicks = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
+        events.filter(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
             F.col("event_id").alias("click_id"),
@@ -483,8 +476,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("click_ts", WATERMARK_DELAY)
     )
     purchases = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
+        events.filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("user_id"),
             F.col("event_id").alias("purchase_id"),
@@ -542,17 +534,16 @@ def q_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ckpt = _ephemeral_checkpoint(spark, f"feb_{_uuid4().hex[:12]}")
     try:
-        with stream_partitions(spark):
-            q = (
-                agg.writeStream.foreachBatch(write_batch)
-                .option("checkpointLocation", ckpt)
-                .outputMode("complete")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        q = (
+            agg.writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", ckpt)
+            .outputMode("complete")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(out)
@@ -629,25 +620,24 @@ def q_stream_cdc_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     sdf = events_stream(spark, sf_dir)
-    with stream_partitions(spark):
-        latest = (
-            sdf.select(
-                "user_id",
-                F.unix_micros("ts").alias("ts_us"),
-                "event_id",
-                "event_type",
-                "value",
-            )
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                make_cdc_latest_fn(),
-                outputStructType=_CDC_OUT_SCHEMA,
-                stateStructType=_CDC_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+    latest = (
+        sdf.select(
+            "user_id",
+            F.unix_micros("ts").alias("ts_us"),
+            "event_id",
+            "event_type",
+            "value",
         )
-        sink = run_to_memory(latest, "update")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            make_cdc_latest_fn(),
+            outputStructType=_CDC_OUT_SCHEMA,
+            stateStructType=_CDC_STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+    sink = run_to_memory(latest, "update")
     # The update-mode memory sink accumulates one emission per key per
     # micro-batch; collapse to each key's LAST emission so the result
     # is the final snapshot even when the replay splits into multiple
@@ -857,7 +847,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     refreshed snapshot is picked up on restart. Money folds in the
     decimal domain; results are micro-batch-split invariant."""
     sdf = events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
-    cust = load_table(spark, sf_dir, "customer").select(
+    cust = load_table(sdf.sparkSession, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     agg = (
@@ -914,8 +904,9 @@ def q_stream_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The documents table as a streaming DataFrame (file-source
-    replay) — the corpus arriving as a feed, the shape of continuous
-    ingest dedup."""
+    replay) on ``stream_session(spark)`` — the corpus arriving as a
+    feed, the shape of continuous ingest dedup."""
+    spark = stream_session(spark)
     path = os.path.join(sf_dir, "documents.parquet")
     schema = table_schema(spark, path)
     return _table_stream(spark, sf_dir, "documents.parquet", schema)

@@ -52,6 +52,33 @@ def test_minhash_lsh_leaves_no_cached_plan(spark, sf_dir):
     assert got and got == want, (got[:10], want[:10])
 
 
+def test_minhash_lsh_warm_call_reuses_its_signatures(spark, sf_dir, monkeypatch):
+    """The corpus's signature table is memoized (functions/memo.py):
+    a second call reads the checkpointed signatures and launches fewer
+    jobs than the first, with the same rows and no cached plan. The
+    verbatim-duplicate probe is warmed first, so only the signatures
+    differ between the two calls."""
+    import mapreducegcp_spark.functions.memo as memo
+
+    from mapreducegcp_spark.operators.dedup import has_verbatim_dups
+    from mapreducegcp_spark.registry import all_queries
+
+    monkeypatch.setattr(memo, "_ENTRIES", {})
+    spark.catalog.clearCache()
+    has_verbatim_dups(spark, sf_dir)
+    fn = all_queries()["dedup_minhash_lsh"].fn
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    runs = []
+    for _ in range(2):
+        before = dag.numTotalJobs()
+        rows = sorted(map(tuple, fn(spark, sf_dir).collect()))
+        runs.append((dag.numTotalJobs() - before, rows))
+    (cold_jobs, cold_rows), (warm_jobs, warm_rows) = runs
+    assert warm_jobs < cold_jobs, runs
+    assert warm_rows == cold_rows and warm_rows
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_simhash_close_for_similar_docs(spark, sf_dir):
     """Near-dup pairs (from exact jaccard) should have small simhash
     hamming distance, far pairs a large one, on average."""

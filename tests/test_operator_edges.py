@@ -719,27 +719,22 @@ def test_gopher_rules_each_gate_fires_independently(spark, monkeypatch):
     assert rows[1].distinct_ratio == pytest.approx(1.0)
 
 
-def test_recursive_cte_cap_monotone_and_counts_cached(spark, sf_dir, monkeypatch):
-    """sql_recursive_cte_hierarchy's session-wide recursion-row-cap
-    mutation must be MONOTONE (never lowered below what an earlier,
-    larger corpus established — otherwise whether a later recursion
-    trips RECURSION_ROW_LIMIT_EXCEEDED depends on query order) and its
-    node counts must be cached per (session, corpus) so repeat
-    invocations run zero count() jobs."""
+def test_recursive_cte_cap_on_fork_and_counts_cached(spark, sf_dir, monkeypatch):
+    """sql_recursive_cte_hierarchy sizes its recursion row cap on its
+    own fork: the caller's cap is unchanged after the builder, and the
+    returned DataFrame still collects after the caller's cap drops to
+    10. Its node counts are memoized per corpus, so repeat invocations
+    run zero count() jobs."""
     import mapreducegcp_spark.operators.relational as rel
 
     fn = all_queries()["sql_recursive_cte_hierarchy"].fn
     key = "spark.sql.cteRecursionRowLimit"
     prior = spark.conf.get(key)
     try:
-        # a bigger earlier corpus raised the cap: must not be lowered
-        spark.conf.set(key, "99000000")
-        fn(spark, sf_dir)
-        assert int(spark.conf.get(key)) == 99_000_000
-        # from the default, the tiny corpus keeps the 1M floor
-        spark.conf.set(key, "1000000")
-        fn(spark, sf_dir)
-        assert int(spark.conf.get(key)) == 1_000_000
+        df = fn(spark, sf_dir)
+        assert spark.conf.get(key) == prior
+        spark.conf.set(key, "10")
+        assert sum(r.n_nodes for r in df.collect()) > 10
     finally:
         spark.conf.set(key, prior)
 
@@ -754,16 +749,13 @@ def test_recursive_cte_cap_monotone_and_counts_cached(spark, sf_dir, monkeypatch
 
 
 def test_recursion_cap_binds_at_execution_not_build(spark):
-    """The adjudication receipt for keeping the recursion cap MONOTONE
-    session-global rather than per-query scoped (round-10 ADVICE on
-    relational.py): spark.sql.cteRecursionRowLimit is read when the
-    recursion EXECUTES, not when the DataFrame is built — so a
-    set-before/restore-after bracket around the builder would
-    re-tighten the cap under every not-yet-executed recursive
-    DataFrame, making failure depend on build order. This pins the
-    engine behavior the design rests on; if a Spark upgrade ever binds
-    the cap at build time, this fails and per-query scoping becomes
-    the better design."""
+    """spark.sql.cteRecursionRowLimit is read when the recursion
+    EXECUTES, under the conf of the DataFrame's own session, not when
+    the DataFrame is built — so a set-before/restore-after bracket on a
+    shared session would re-tighten the cap under every not-yet-executed
+    recursive DataFrame. This is why sql_recursive_cte_hierarchy sets
+    its cap on a fork (session.py): the cap travels with the returned
+    DataFrame, whatever the caller's session says later."""
     import pytest
 
     key = "spark.sql.cteRecursionRowLimit"

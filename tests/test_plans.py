@@ -653,15 +653,20 @@ def checkpointed(monkeypatch):
     return plans
 
 
-def test_minhash_lsh_skips_collapse_on_dupfree_corpus(spark, checkpointed):
+def test_minhash_lsh_skips_collapse_on_dupfree_corpus(spark, checkpointed, monkeypatch):
     """Adaptive exact-collapse (round 10): sf0.001 has ZERO verbatim
     duplicates, so the 1-row group-map sync must strip the collapse
     anti-join, both expansion joins and the intra-group union from the
     physical plan — the representative pairs ARE the output, and a
     duplicate-free corpus pays nothing beyond the one cached group-map
     materialization. The collapse shape on a corpus WITH duplicates is
-    pinned by test_minhash_lsh_exact_collapse_precedes_banding."""
+    pinned by test_minhash_lsh_exact_collapse_precedes_banding. An empty
+    memo makes the builder checkpoint its signatures afresh."""
+    import mapreducegcp_spark.functions.memo as memo
+
+    monkeypatch.setattr(memo, "_ENTRIES", {})
     tree, _ = _plans(spark, "dedup_minhash_lsh")
+    assert checkpointed
     assert "Union" not in tree, tree[:2000]
     for plan in (tree, *checkpointed):
         assert "LeftSemi" not in plan and "LeftAnti" not in plan, plan[:2000]

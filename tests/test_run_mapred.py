@@ -48,6 +48,16 @@ def test_wordcount_over_literal_string(engine):
     assert out == {"spark": 3}
 
 
+def test_literal_string_job_leaves_the_active_session(spark, engine):
+    """The job's fork never becomes the thread's active session, which
+    ``SparkSession.builder.getOrCreate()`` and pandas-on-Spark read."""
+    jsession = type(spark)._get_j_spark_session_class(spark._jvm)
+    before = jsession.getActiveSession()
+    uid = engine.init_cluster(1, 2)
+    engine.run_mapred(uid, "a b a", "WordCountMapper", "WordCountReducer")
+    assert jsession.getActiveSession().equals(before)
+
+
 def test_inverted_index_over_directory(engine, corpus_dir):
     uid = engine.init_cluster(2, 2)
     out = json.loads(

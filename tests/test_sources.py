@@ -23,9 +23,6 @@ def _inferred(spark, sf_dir, name):
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    for col, dtype in df.dtypes:
-        if dtype == "timestamp_ntz":
-            df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
 
 

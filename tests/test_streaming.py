@@ -355,7 +355,9 @@ def test_stateful_user_stats_on_rocksdb_state_store(spark):
     state-store provider, assert the provider is REALLY in effect
     (rocksdb* custom metrics on the state operator) and that results
     match the batch aggregate bit-for-bit — state semantics must be
-    provider-independent."""
+    provider-independent. The provider is set on the caller's session
+    and reaches the stream through events_stream's fork, which clones
+    the caller's runtime confs (session.py)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from mapreducegcp_spark.streaming.events import (
@@ -363,7 +365,6 @@ def test_stateful_user_stats_on_rocksdb_state_store(spark):
         _USER_STATS_SCHEMA,
         events_stream,
         make_user_stats_fn,
-        stream_partitions,
     )
 
     ROCKS = (
@@ -386,18 +387,17 @@ def test_stateful_user_stats_on_rocksdb_state_store(spark):
                 timeoutConf=GroupStateTimeout.NoTimeout,
             )
         )
-        with stream_partitions(spark):
-            q = (
-                stats.writeStream.format("memory")
-                .queryName("rocksdb_user_stats")
-                .outputMode("update")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-                prog = q.lastProgress
-            finally:
-                q.stop()
+        q = (
+            stats.writeStream.format("memory")
+            .queryName("rocksdb_user_stats")
+            .outputMode("update")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            prog = q.lastProgress
+        finally:
+            q.stop()
         op = prog["stateOperators"][0]
         assert op["operatorName"] == "applyInPandasWithState"
         rocks_metrics = [
@@ -406,7 +406,7 @@ def test_stateful_user_stats_on_rocksdb_state_store(spark):
         assert len(rocks_metrics) >= 10, rocks_metrics  # provider really on
         got = {
             (r.user_id, r.n_events, r.total_cents)
-            for r in spark.table("rocksdb_user_stats").collect()
+            for r in stats.sparkSession.table("rocksdb_user_stats").collect()
         }
     finally:
         if prev is None:

@@ -17,7 +17,9 @@ real consumer would use, then:
    compare check_oracles makes) for the first ``--front`` catalog queries
    (registration order) plus any names passed on the command line;
 4. edge probes: nonexistent sf_dir raises cleanly, empty literal
-   corpus yields empty wordcount, unknown table -> KeyError.
+   corpus yields empty wordcount, unknown table -> KeyError, and the
+   strict sample left the session's confs and temp views as they were
+   (the fork rule, mapreducegcp_spark/session.py).
 
     python tools/verify_contract.py                 # front-12 + probes
     python tools/verify_contract.py --front 20
@@ -88,6 +90,11 @@ def main() -> int:
         src = f"{p}/*.parquet" if p.is_dir() else str(p)
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
 
+    def session_state() -> tuple:
+        views = sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+        return spark.conf.getAll, views
+
+    state_before = session_state()
     sample = list(dict.fromkeys(list(qs)[: args.front] + args.names))
     fails: list[str] = []
     for name in sample:
@@ -105,6 +112,13 @@ def main() -> int:
 
     # edge probes
     probes = {}
+    (conf0, views0), (conf1, views1) = state_before, session_state()
+    changed = sorted(k for k in conf0.keys() | conf1.keys() if conf0.get(k) != conf1.get(k))
+    views = sorted(set(views0) ^ set(views1))
+    probes["session_unchanged"] = (
+        "unchanged" if not changed and not views
+        else f"confs {changed}, views {views} (bad)"
+    )
     try:
         qs["wordcount"](spark, "/nonexistent_sf_dir").collect()
         probes["missing_sf_dir"] = "NO RAISE (bad)"
