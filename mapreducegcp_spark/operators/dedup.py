@@ -1080,10 +1080,10 @@ def two_phase_components(
     would forfeit the exchange reuse the round is built on. This bound
     is EXECUTABLE, not prose: pass ``block_probe`` (a callable
     ``(tag, checkpointed_df) -> None``, tags "C0"/"round{i}") and the
-    gated crossverify run (tests/test_crossverify100.py::
-    test_two_phase_checkpoint_blocks_bounded) measures every pinned
-    block of every round on the full-volume blowup pair graphs against
-    that bound. Callers checkpointing RAW pair streams (unbounded hot
+    gated test tests/test_scale_probe.py::
+    test_two_phase_checkpoint_blocks_bounded measures every pinned
+    block of every round on the blowup tiers' pair graphs against that
+    bound. Callers checkpointing RAW pair streams (unbounded hot
     keys) must use safe_checkpoint."""
     spark = pairs.sparkSession
     half = pairs.select(F.col(a).alias("x"), F.col(b).alias("y")).where(

@@ -31,15 +31,19 @@ re-expressed Spark-first:
   ``numberOfReducers`` becomes ``spark.sql.shuffle.partitions`` on the
   job's own fork of the session (session.py).
 - the JSON gather/sink (``combineAndStoreReducerOutput``,
-  Master/Master.py:97-108) is ``df.write.json`` plus a merged-dict
-  return value. The reference returns a JSON array with one dict per
-  reducer; this engine emits one logical table, which per SURVEY.md
-  §2.3 is the comparison-stable form.
+  Master/Master.py:97-108) is a driver-side gather: the result
+  DataFrame is pulled through ``toLocalIterator`` into one merged dict,
+  returned as JSON and, with ``outputPath``, written from the driver.
+  The reference returns a JSON array with one dict per reducer; this
+  engine emits one logical table, which per SURVEY.md §2.3 is the
+  comparison-stable form.
 
-Scale note: the facade's *return value* is driver-side JSON for RPC
-parity (fine for the reference's corpus sizes); at 100 TB callers use
-``outputPath`` (distributed JSON write) or the DataFrame API directly
-— ``result_df`` is returned unforced for exactly that reason.
+Scale note: ``toLocalIterator`` moves one partition at a time to the
+driver, but the merged dict and its JSON string hold the whole result
+there, so ``run_mapred`` is bounded by driver memory (fine for the
+reference's corpus sizes). The distributed writer is ``json_sink``
+(one file per partition, no driver transit); at volume, callers build
+the plan with the DataFrame API and write it through ``json_sink``.
 """
 
 from __future__ import annotations

@@ -771,3 +771,40 @@ def test_recursion_cap_binds_at_execution_not_build(spark):
             df.collect()
     finally:
         spark.conf.set(key, prior)
+
+
+def test_q14_scales_the_promo_sum_as_a_decimal(spark, monkeypatch):
+    """TPC-H Q14's x100 is taken on the exact decimal promo sum, as its
+    oracle does. On the double it rounds once more: for these two lines
+    100.0 * 8468852.54 / 10723225.14 reads 78.97672975651054, one bit
+    off the oracle's 78.97672975651055 (the 10x tier of sf0.01 showed
+    the same last-digit split)."""
+    import datetime
+
+    import duckdb
+    import pandas as pd
+
+    import mapreducegcp_spark.operators.tpch as tpch_mod
+
+    ship = datetime.datetime(1997, 9, 15)
+    tables = {
+        "lineitem": pd.DataFrame(
+            {
+                "l_partkey": [1, 2],
+                "l_extendedprice": [8468852.54, 2254372.60],
+                "l_discount": [0.0, 0.0],
+                "l_shipdate": [ship, ship],
+            }
+        ),
+        "part": pd.DataFrame({"p_partkey": [1, 2], "p_type": ["PROMO", "STANDARD"]}),
+    }
+    monkeypatch.setattr(
+        tpch_mod, "load_table", lambda s, d, n: s.createDataFrame(tables[n])
+    )
+    got = tpch_mod.q_tpch_q14(spark, "ignored").first().promo_revenue_pct
+
+    con = duckdb.connect()
+    for name, pdf in tables.items():
+        con.register(name, pdf)
+    want = con.execute(tpch_mod._Q14_ORACLE).fetchone()[0]
+    assert got == want == 78.97672975651055

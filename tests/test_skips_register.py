@@ -1,7 +1,7 @@
 """Executable skip register (round-11 verdict ask #6, no Spark needed).
 
 Every skip construct in tests/ must map to a registered boundary class
-(gate / corpus / container / artifact / checkout) — a NEW skip with an
+(gate / corpus / container / checkout) — a NEW skip with an
 unregistered reason fails here, so a skip can never again be an
 unexplained gap. The committed SKIPS.md must match the scan (the
 CATALOG.md pattern: generated inventory, drift fails loudly).
@@ -81,7 +81,7 @@ def test_gate_class_dominates_runtime_skips():
     by_class: dict[str, list[dict]] = {}
     for s in sites:
         by_class.setdefault(s["class"], []).append(s)
-    assert set(by_class) <= {"gate", "corpus", "container", "artifact", "checkout"}
+    assert set(by_class) <= {"gate", "corpus", "container", "checkout"}
     assert len(by_class.get("container", [])) == 2, by_class.get("container")
 
 

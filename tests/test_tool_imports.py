@@ -92,20 +92,12 @@ def test_tool_query_lists_name_registered_queries(script_path):
     until the tool itself runs."""
     from mapreducegcp_spark.registry import all_queries
 
-    bp, sw, cv, wa = (
-        importlib.import_module(m)
-        for m in ("blowup_probe", "sweep100", "crossverify100", "windows_audit")
-    )
+    bp, wa = (importlib.import_module(m) for m in ("blowup_probe", "windows_audit"))
     lists = {
         "blowup_probe.RATIO_QUERIES": bp.RATIO_QUERIES,
-        "blowup_probe.VERIFY_100X": bp.VERIFY_100X,
         "blowup_probe.SKEW_QUERIES": bp.SKEW_QUERIES,
-        "blowup_probe.SKEW_VERIFY": bp.SKEW_VERIFY,
         "blowup_probe.EXCLUDE": [n for per in bp.EXCLUDE.values() for n in per],
-        "sweep100.PRE_EXCLUDED": sw.PRE_EXCLUDED,
-        "sweep100.ENGINE_AGREEMENT": sw.ENGINE_AGREEMENT,
-        "sweep100.RESTRICTION_CHECKED": sw.RESTRICTION_CHECKED,
-        "crossverify100.EXCLUDED": cv.EXCLUDED,
+        "blowup_probe.ORACLE_EXCLUDED": bp.ORACLE_EXCLUDED,
         "windows_audit.ALLOWLIST": [name for name, _ in wa.ALLOWLIST],
         **{
             f"{m}.QUERIES": importlib.import_module(m).QUERIES

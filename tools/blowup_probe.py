@@ -42,9 +42,15 @@ step shows ~100x per decade: the labeled quadratic baseline
 signature next to `similarity_ann_ivf`'s linear one, and excluded from
 the 100x tier (10,000x its 1x cost, by design).
 
+``--verify`` checks every query's values at a tier (``verify``): on the
+full tier for all but the ORACLE_EXCLUDED register, whose oracles are
+quadratic in the corpus, and on the tier's stratum (``build_stratum``)
+for those.
+
     python tools/blowup_probe.py --build --factor 10
     python tools/blowup_probe.py --run --factor 10            # the 18 catalog queries
     python tools/blowup_probe.py --run --factor 10 --only 0:20  # a slice of RATIO_QUERIES
+    python tools/blowup_probe.py --verify --factor 10         # every query, strict, at 10x
     (default root /tmp/blowup -> /tmp/blowup/sf1, /tmp/blowup/sf10)
 """
 
@@ -53,7 +59,9 @@ from __future__ import annotations
 import argparse
 import json
 import re
+import shutil
 import statistics
+import subprocess
 import sys
 import time
 from pathlib import Path
@@ -65,7 +73,7 @@ sys.path.insert(0, str(REPO / "perfbench"))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from mapreducegcp_spark.session import get_spark
+from mapreducegcp_spark.session import fork, get_spark
 from mapreducegcp_spark.sources.catalog import TABLES, load_table
 from retry_probe import row_hash_rows  # tools/ is on the path
 
@@ -98,45 +106,32 @@ EXCLUDE = {
     },
 }
 
-# queries whose DuckDB oracle is tractable at the 100x corpus AND whose
-# output is meaningful under replication — the one-command version of
-# the 100x exact-verification table in SCALE.md. (Excluded from the
-# list, with reasons: minhash/phash/jaccard pair graphs and novelty
-# would measure the replication's duplicate structure; tpch_q11
-# returns empty at 100x because its 0.001-of-total threshold scales
-# with the corpus while per-part value does not.)
-VERIFY_100X = [
-    "agg_pricing_summary",
-    "cdc_latest_snapshot",
-    "cohort_retention",
-    "events_attribution_linear",
-    "events_run_length_islands",
-    "funnel_view_click_purchase",
-    "timeseries_ohlc_downsample",
-    "agg_skew_kurtosis",
-    "agg_weighted_median",
-    "asof_join_last_click",
-    "calendar_gap_fill",
-    "customer_gini_coefficient",
-    "customer_pareto_deciles",
-    "dedup_exact",
-    "dedup_substring_spans",
-    "feature_quantile_bins",
-    "pipeline_token_budget_plan",
-    "quality_classifier_eval",
-    "quality_classifier_funnel",
-    "quality_classifier_scores",
-    "sample_dsir_importance",
-    "sessionize_events",
-    "subquery_scalar_correlated",
-    "text_gopher_rules",
-    "tfidf_top_terms",
-    "tpch_q10_returned_items",
-    "tpch_q14_promo_effect",
-    "tpch_q8_market_share",
-    "window_topn_per_customer",
-    "wordcount",
-]
+# The quadratic-oracle register: queries whose DuckDB ORACLE grows
+# quadratically with the corpus (exact shingle pair graphs and their
+# closures, all-pairs cosine / hamming / nearest-neighbour). The
+# engines' own banded or bucketed plans stay linear; the oracles do
+# not, and at a blowup tier they outgrow this box. --verify checks
+# every one of them on the tier's stratum (``build_stratum``) instead
+# of the full tier, at every factor, so none is skipped silently.
+ORACLE_EXCLUDED: dict[str, str] = {
+    "dedup_ngram_jaccard": "exact shingle self-join oracle quadratic in blowup (spilled >70 GB at 10x)",
+    "dedup_ngram_containment": "exact shingle self-join oracle quadratic in blowup",
+    "dedup_lsh_eval": "eval against the exact pair graph (quadratic oracle)",
+    "dedup_simhash_eval": "eval against the exact pair graph (quadratic oracle)",
+    "dedup_semantic_vs_lexical_eval": "eval joins the exact lexical pair graph (quadratic oracle)",
+    "dedup_connected_components": "recursive-CTE closure over the quadratic pair graph",
+    "dedup_keep_manifest": "manifest derives from the quadratic pair graph",
+    "decontaminate_ngram_overlap": "train x test n-gram join saturates at blowup vocabulary",
+    "split_leakage_safe": "leakage graph is the quadratic pair graph",
+    "split_leakage_audit": "leakage graph is the quadratic pair graph (363 s at 3x)",
+    "pipeline_training_dataset": "capstone includes the pair-graph dedup stage (846 s at 3x)",
+    "dedup_embedding_cosine": "all-pairs cosine oracle: 4e12 pairs at 2M vectors",
+    "dedup_embedding_clusters": "components over the all-pairs cosine oracle",
+    "similarity_nearest_neighbor": "all-pairs exact-NN oracle: 4e12 cosines at 2M vectors",
+    "similarity_topk_bruteforce": "labeled O(n^2) baseline; oracle shares the blowup",
+    "dedup_incremental": "exact shingle probe join saturates at blowup vocabulary (>77 GB spill measured); df_cap=1000 scale path 25.5s at 100x",
+    "multimodal_phash_near_dup": "all-pairs hamming oracle: 1.25e11 candidate pairs in DuckDB (>900s); engine multi-index completes standalone in 204s",
+}
 
 # The 1x/Nx linearity set: every name's cost must grow at most linearly
 # with the replication factor (tests/test_scale_probe.py bounds each
@@ -320,6 +315,73 @@ def tier_dir(root, sf_dir: str, factor: int, skew: bool = False) -> Path:
     return Path(root) / f"sf{float(m.group(1)) * factor:g}{'skew' if skew else ''}"
 
 
+# The stratum keeps replicated rows whose xxhash64(own id) mod
+# (factor - 1) hits this residue (taken mod the modulus at 3x).
+SAMPLE_HIT = 7
+
+
+def stratum_dir(tier: Path) -> Path:
+    """Where ``build_stratum`` writes the stratum of ``tier``."""
+    return tier.with_name(tier.name + "strat")
+
+
+def build_stratum(spark: SparkSession, tier: Path, factor: int) -> Path:
+    """A deterministic stratum of ``tier``, small enough for the
+    quadratic oracles: copy 0 of ``documents`` and ``embeddings`` in
+    full (both ends of every 1x pair are present) plus a
+    1-in-``factor - 1`` xxhash64 sample of the replicated copies, so
+    the stratum holds about two copies' worth of rows drawn from the
+    tier's own population. The other eight tables are symlinked, and
+    they are written last: a stratum with every table present is
+    complete, and a complete stratum is returned as it is."""
+    out = stratum_dir(tier)
+    if all((out / f"{t}.parquet").exists() for t in TABLES):
+        return out
+    out.mkdir(parents=True, exist_ok=True)
+    mod = factor - 1
+    for table, key in (("documents", "doc_id"), ("embeddings", "vec_id")):
+        keep = (F.col(key) < OFFSET) | (
+            F.pmod(F.xxhash64(key), F.lit(mod)) == SAMPLE_HIT % mod
+        )
+        dst = out / f"{table}.parquet"
+        (
+            spark.read.parquet(str(tier / f"{table}.parquet"))
+            .filter(keep)
+            .repartition(8)
+            .write.mode("overwrite")
+            .parquet(str(dst))
+        )
+        print(f"stratum {table}: {spark.read.parquet(str(dst)).count()} rows", flush=True)
+    for table in TABLES:
+        dst = out / f"{table}.parquet"
+        if not dst.exists():
+            dst.symlink_to((tier / f"{table}.parquet").resolve())
+    return out
+
+
+def verify(tier: Path, strat: Path, only: list[str] | None = None) -> int:
+    """Strict Spark-vs-DuckDB compare of ``only`` (default: every
+    registered query) in two ``check_oracles`` runs: the full tier for
+    every name outside ORACLE_EXCLUDED, and ``strat`` for the names in
+    it. Returns 1 if either run fails, else 0."""
+    from mapreducegcp_spark.registry import all_queries
+
+    names = only or list(all_queries())
+    quad = [n for n in names if n in ORACLE_EXCLUDED]
+    n_full = len(names) - len(quad)
+    print(f"verify: {n_full} queries on {tier}, {len(quad)} on {strat}", flush=True)
+    check = [sys.executable, str(Path(__file__).with_name("check_oracles.py"))]
+    runs = []
+    if n_full:
+        skip = [f"--exclude={n}" for n in ORACLE_EXCLUDED]
+        runs.append([*check, "--sf-dir", str(tier), *(only or []), *skip])
+    if quad:
+        runs.append([*check, "--sf-dir", str(strat), *quad])
+    # a list, not a generator: the stratum half runs even when the
+    # full-tier half fails
+    return 1 if any([subprocess.call(cmd) for cmd in runs]) else 0
+
+
 def _run(fn, spark: SparkSession, sf_dir: str) -> float:
     """Seconds for one query's full plan, written to the noop sink.
     Includes building the plan: iterative operators (BPE trainer,
@@ -443,24 +505,6 @@ SKEW_QUERIES = [
     "tfidf_top_terms",
 ]
 
-# strict value-oracle list at the skewed tier — skew changes the data
-# DISTRIBUTION, never the semantics, so the same Spark-vs-DuckDB
-# compare must stay green on a zipfian corpus (hot join key, hot
-# window partition, one giant duplicate cluster).
-SKEW_VERIFY = [
-    "wordcount",
-    "dedup_exact",
-    "sessionize_events",
-    "window_topn_per_customer",
-    "tpch_q10_returned_items",
-    "agg_pricing_summary",
-    "events_run_length_islands",
-    "tfidf_top_terms",
-    "text_gopher_rules",
-    "quality_classifier_scores",
-]
-
-
 # Shuffle partitions for the skew receipt, fixed so that the receipt
 # does not depend on the box: with 4 partitions (local[4]) the hot key
 # of the 3x tier (14% of orders) never reaches twice the median
@@ -484,29 +528,14 @@ def skew_receipt(spark: SparkSession, big_dir: str) -> None:
     sha256 with the skew-split disabled."""
     from mapreducegcp_spark.profile import stages
 
-    conf = spark.conf
-    saved = {
-        k: conf.get(k)
-        for k in (
-            "spark.sql.shuffle.partitions",
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.enabled",
-            "spark.sql.adaptive.skewJoin.enabled",
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            "spark.sql.adaptive.forceOptimizeSkewedJoin",
-        )
-    }
-
-    def hot_join():
+    def hot_join(session: SparkSession):
         # grouped on c_nationkey, NOT the join key: a downstream
         # aggregation re-shuffles anyway, so AQE is free to split the
         # skewed join partition without introducing an extra exchange
         # (grouping on c_custkey made AQE decline the split — the join
         # output would have had to keep hash(c_custkey) distribution)
-        o = load_table(spark, big_dir, "orders")
-        c = load_table(spark, big_dir, "customer")
+        o = load_table(session, big_dir, "orders")
+        c = load_table(session, big_dir, "customer")
         return (
             o.join(c, o.o_custkey == c.c_custkey)
             .groupBy("c_nationkey")
@@ -521,20 +550,24 @@ def skew_receipt(spark: SparkSession, big_dir: str) -> None:
         )
 
     def run_once(split_on: bool, mean_bytes: int = 0):
-        conf.set("spark.sql.shuffle.partitions", str(SKEW_PARTITIONS))
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        conf.set("spark.sql.adaptive.enabled", "true")
-        conf.set("spark.sql.adaptive.skewJoin.enabled", str(split_on).lower())
-        conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", str(split_on).lower())
+        on = str(split_on).lower()
+        conf = {
+            "spark.sql.shuffle.partitions": str(SKEW_PARTITIONS),
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.adaptive.skewJoin.enabled": on,
+            "spark.sql.adaptive.forceOptimizeSkewedJoin": on,
+        }
         if split_on:
-            conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-            conf.set(
-                "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-                str(2 * mean_bytes),
-            )
-            conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(mean_bytes))
+            conf |= {
+                "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+                "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": str(
+                    2 * mean_bytes
+                ),
+                "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(mean_bytes),
+            }
         seen = {s.stageId() for s in stages(spark)}
-        df = hot_join()
+        df = hot_join(fork(spark, conf))
         t0 = time.time()
         rows = df.collect()
         sec = time.time() - t0
@@ -546,16 +579,9 @@ def skew_receipt(spark: SparkSession, big_dir: str) -> None:
         )
         return (*row_hash_rows(rows), sec, plan, shuffle)
 
-    try:
-        n_off, h_off, t_off, _, shuffle = run_once(False)
-        mean = max(1, shuffle // SKEW_PARTITIONS)
-        n_on, h_on, t_on, plan_on, _ = run_once(True, mean)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
+    n_off, h_off, t_off, _, shuffle = run_once(False)
+    mean = max(1, shuffle // SKEW_PARTITIONS)
+    n_on, h_on, t_on, plan_on, _ = run_once(True, mean)
     split_engaged = "skew=true" in plan_on
     print(
         json.dumps(
@@ -619,20 +645,22 @@ def main() -> None:
     ap.add_argument("--root", default="/tmp/blowup")
     # the 3x tier exists for the exact-pair-graph family, whose cost is
     # quadratic in the blowup factor on THIS corpus by construction
-    # (see VERIFY notes / SCALE.md)
+    # (see SCALE.md)
     ap.add_argument("--factor", type=int, default=10, choices=(3, 10, 100))
     ap.add_argument("--build", action="store_true")
     ap.add_argument("--run", action="store_true")
     ap.add_argument(
         "--only",
-        help="with --run: comma-separated query names, or an i:j slice of "
-        "RATIO_QUERIES (default: the 18 catalog queries)",
+        help="comma-separated query names, or an i:j slice of RATIO_QUERIES; "
+        "scopes --run (default: the 18 catalog queries) and --verify "
+        "(default: every registered query)",
     )
     ap.add_argument(
         "--verify",
         action="store_true",
-        help="strict Spark-vs-DuckDB multiset compare of the VERIFY_100X "
-        "list against the blowup corpus (the SCALE.md receipt, one command)",
+        help="strict Spark-vs-DuckDB multiset compare: the full tier for "
+        "every query outside ORACLE_EXCLUDED, the tier's stratum (built "
+        "if absent) for the queries in it",
     )
     ap.add_argument(
         "--skew",
@@ -640,7 +668,7 @@ def main() -> None:
         help="zipfian replication tier: hot join key (o_custkey), hot "
         "window partition (user_id), hot document text (shingle df). "
         "--run uses the skew-sensitive query list + the AQE skew-split "
-        "receipt; --verify uses the SKEW_VERIFY oracle list",
+        "receipt",
     )
     ap.add_argument(
         "--chain",
@@ -658,24 +686,15 @@ def main() -> None:
     spark = get_spark("blowup-probe")
     if args.build:
         build(spark, args.sf_dir, out_dir, args.factor, skew=args.skew)
+        shutil.rmtree(stratum_dir(out_dir), ignore_errors=True)  # drawn from the old tier
     if args.run:
         run(spark, args.sf_dir, str(out_dir), args.factor, skew=args.skew, only=args.only)
     if args.chain:
         chain_probe(spark)
     if args.verify:
-        import subprocess
-
-        rc = subprocess.call(
-            [
-                sys.executable,
-                str(Path(__file__).with_name("check_oracles.py")),
-                "--sf-dir",
-                str(out_dir),
-                *(SKEW_VERIFY if args.skew else VERIFY_100X),
-            ]
-        )
-        if rc:
-            sys.exit(rc)
+        strat = build_stratum(spark, out_dir, args.factor)
+        spark.stop()  # the two check_oracles runs start their own sessions
+        sys.exit(verify(out_dir, strat, select(args.only) if args.only else None))
 
 
 if __name__ == "__main__":

@@ -1,11 +1,11 @@
 #!/usr/bin/env python
-"""Local replica of the driver's t2 correctness gate.
+"""The strict oracle gate: every query's values against its DuckDB twin.
 
 Runs every registered query on Spark and its oracle on DuckDB over the
 same parquet tables, then compares row count, sorted column names, and
 the exact multiset of values (columns sorted by name, rows sorted).
-Stricter than the driver's value-hash: floats must match bit-for-bit,
-which the engine guarantees by decimal-exact aggregation and ordered
+The compare is type-strict, and floats must match bit-for-bit, which
+the engine guarantees by decimal-exact aggregation and ordered
 folds (see mapreducegcp_spark.functions.vectors).
 
 Usage:
@@ -18,7 +18,7 @@ import argparse
 import datetime
 import decimal
 import math
-import re
+import os
 import sys
 import time
 from pathlib import Path
@@ -70,6 +70,24 @@ def normalize(df: pd.DataFrame) -> tuple[list[str], list[tuple]]:
     return cols, rows
 
 
+def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per catalog table over
+    ``sf_dir``. Its memory limit is half of physical memory, so an
+    oracle too large for the box raises a DuckDB error instead of
+    getting the process (or the Spark JVM beside it) killed."""
+    con = duckdb.connect()
+    half = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2
+    con.execute(f"SET memory_limit='{half >> 20}MiB'")
+    for t in TABLES:
+        # a table may be a single parquet FILE (the sf fixtures) or a
+        # DIRECTORY of part files (tools/blowup_probe.py output) —
+        # DuckDB needs an explicit glob for the directory layout
+        p = Path(sf_dir) / f"{t}.parquet"
+        src = f"{p}/*.parquet" if p.is_dir() else str(p)
+        con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{src}'")
+    return con
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*", help="query names to check (default: all)")
@@ -80,17 +98,8 @@ def main() -> int:
         action="append",
         default=[],
         metavar="NAME",
-        help="query name to skip (repeatable) — used by large-corpus "
-        "sweeps to defer oracles that are intractable at that volume",
-    )
-    ap.add_argument(
-        "--duckdb-mem",
-        default=None,
-        metavar="LIMIT",
-        help="DuckDB memory_limit (e.g. 24GB). Blowup-corpus oracles "
-        "with dense intermediate joins can otherwise exhaust the box; "
-        "with a limit DuckDB spills or errors instead of OOMing the "
-        "machine out from under the Spark JVM",
+        help="query name to skip (repeatable) — blowup_probe --verify "
+        "checks its quadratic-oracle register on a stratum instead",
     )
     args = ap.parse_args()
 
@@ -108,23 +117,7 @@ def main() -> int:
         "check-oracles", extra_conf={"spark.driver.maxResultSize": "0"}
     )
 
-    con = duckdb.connect()
-    if args.duckdb_mem:
-        # validate before interpolating into SQL: a malformed value
-        # ('20 gigs', quotes) should be an argparse-style error, not a
-        # confusing DuckDB parse error mid-sweep
-        if not re.fullmatch(r"\d+(\.\d+)?\s*[KMGT]i?B", args.duckdb_mem, re.I):
-            ap.error(
-                f"--duckdb-mem {args.duckdb_mem!r}: expected e.g. '20GB' or '512MiB'"
-            )
-        con.execute(f"SET memory_limit='{args.duckdb_mem}'")
-    for t in TABLES:
-        # a table may be a single parquet FILE (driver fixtures) or a
-        # DIRECTORY of part files (tools/blowup_probe.py output) —
-        # DuckDB needs an explicit glob for the directory layout
-        p = Path(args.sf_dir) / f"{t}.parquet"
-        src = f"{p}/*.parquet" if p.is_dir() else str(p)
-        con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{src}'")
+    con = duck_con(args.sf_dir)
 
     n_pass = n_fail = n_skip = 0
     compiled_before, _ = codegen(spark)

@@ -20,8 +20,6 @@ Boundary classes:
 - ``container`` this no-pip container lacks a library/binary the test
                needs; the capability is covered by a documented
                substitute (SCALE.md boundary rows).
-- ``artifact`` needs a committed artifact that appears later in the
-               round (self-resolving).
 
     python tools/skips_audit.py          # print table + verdict
     python tools/skips_audit.py --md     # emit SKIPS.md content
@@ -45,8 +43,8 @@ REGISTER: list[tuple[str, str, str]] = [
     (
         r"RUN_SCALE_PROBE=1",
         "gate",
-        "opt-in scale receipts (1x/10x/100x sweeps, crossverify, "
-        "windows measurement, streaming replay) — re-run per round "
+        "opt-in scale receipts (1x/10x probes, full-volume engine "
+        "checks, windows measurement, streaming replay) — re-run per round "
         "under the gate; default runs stay minutes, not hours",
     ),
     (
@@ -71,12 +69,6 @@ REGISTER: list[tuple[str, str, str]] = [
         "container",
         "wheel build unverifiable in-container; sdist via PEP 517 hooks "
         "is test-pinned — SCALE.md boundary row",
-    ),
-    (
-        r"no receipt-format SWEEP100",
-        "artifact",
-        "validates the round's emitted sweep artifact once committed "
-        "(self-resolving within the round)",
     ),
 ]
 
